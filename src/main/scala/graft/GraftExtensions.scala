@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{AnalysisException, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Engine function registration, packaged both ways Spark supports:
   *
@@ -18,33 +19,41 @@ object GraftFunctions {
 
   private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "kmer_windows" -> { exprs =>
-      kmer.KmerGenerator(exprs.head, exprs(1).eval(null).asInstanceOf[Number].intValue())
+      val k = intArg("kmer_windows", exprs, 2)(1, "k")
+      kmer.KmerGenerator(exprs.head, k)
     },
     "kmer_windows_pos" -> { exprs =>
-      kmer.KmerGenerator(
-        exprs.head, exprs(1).eval(null).asInstanceOf[Number].intValue(), withPos = true)
+      val k = intArg("kmer_windows_pos", exprs, 2)(1, "k")
+      kmer.KmerGenerator(exprs.head, k, withPos = true)
+    },
+    // kmer_codes(text, k): (code, word, n) rows — ACGT windows packed
+    // 2 bits a base, other windows as strings; see kmer.KmerCodeGenerator
+    "kmer_codes" -> { exprs =>
+      val k = intArg("kmer_codes", exprs, 2)(1, "k")
+      kmer.KmerCodeGenerator(exprs.head, k)
+    },
+    // kmer_decode(code, k): a kmer_codes code back to its ACGT string
+    "kmer_decode" -> { exprs =>
+      val k = intArg("kmer_decode", exprs, 2)(1, "k")
+      kmer.KmerDecode(exprs.head, k)
     },
     "ngram_hashes" -> { exprs =>
-      text.NgramHashGenerator(
-        exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue(),
-        exprs(2).eval(null).asInstanceOf[Number].intValue())
+      val arg = intArg("ngram_hashes", exprs, 3) _
+      val (minN, maxN) = (arg(1, "minN"), arg(2, "maxN"))
+      text.NgramHashGenerator(exprs.head, minN, maxN)
     },
     // rolling_hashes(text, k[, keepMod]): all k-window hashes, or the
     // content-defined h % keepMod == 0 sample filtered INSIDE the
     // generator (discarded windows never become rows)
     "rolling_hashes" -> { exprs =>
-      text.RollingHashGenerator(
-        exprs.head, exprs(1).eval(null).asInstanceOf[Number].intValue(),
-        winnowW = 0,
-        keepMod =
-          if (exprs.length > 2) exprs(2).eval(null).asInstanceOf[Number].intValue() else 1)
+      val arg = intArg("rolling_hashes", exprs, 2, 3) _
+      val (k, keepMod) = (arg(1, "k"), if (exprs.length > 2) arg(2, "keepMod") else 1)
+      text.RollingHashGenerator(exprs.head, k, winnowW = 0, keepMod = keepMod)
     },
     "winnow_fingerprints" -> { exprs =>
-      text.RollingHashGenerator(
-        exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue(),
-        exprs(2).eval(null).asInstanceOf[Number].intValue())
+      val arg = intArg("winnow_fingerprints", exprs, 3) _
+      val (k, w) = (arg(1, "k"), arg(2, "w"))
+      text.RollingHashGenerator(exprs.head, k, w)
     },
     // ac_matches(text, 'p1|p2|…'): every occurrence of every literal
     // pattern (overlapping included) via a per-executor-cached
@@ -69,17 +78,16 @@ object GraftFunctions {
     // EM hot loop as one codegen'd pass (no per-element HOF
     // interpretation, no per-step accumulator array copies)
     "unigram_segment" -> { exprs =>
-      functions.UnigramSegment(
-        exprs.head, exprs(1), exprs(2).eval(null).asInstanceOf[Number].intValue())
+      val maxPiece = intArg("unigram_segment", exprs, 3)(2, "maxPiece")
+      functions.UnigramSegment(exprs.head, exprs(1), maxPiece)
     },
     // common_run_len(ta, pa, tb, pb, bound, step): maximal aligned
     // char run extending right (step=+1) or left (step=-1) from two
     // seed anchors — the winnowing seed extension as one byte-walking
     // codegen'd pass (no per-block interpreted substring re-scans)
     "common_run_len" -> { exprs =>
-      functions.CommonRunLen(
-        exprs(0), exprs(1), exprs(2), exprs(3), exprs(4),
-        exprs(5).eval(null).asInstanceOf[Number].intValue())
+      val step = intArg("common_run_len", exprs, 6)(5, "step")
+      functions.CommonRunLen(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4), step)
     },
     // bpe_merge_all(syms, as, bs): sequential greedy-leftmost replay of
     // a whole BPE merge table, each merge one in-place codegen'd pass
@@ -102,6 +110,31 @@ object GraftFunctions {
       new org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1))
     },
   )
+
+  /** Argument `i` (called `param`) of a call to `fn` with `exprs`, after
+    * checking that the call has one of the `arities` and that the
+    * argument is a non-null foldable integer. A bad call fails analysis
+    * with an error that names `fn`, never an internal error.
+    */
+  private def intArg(fn: String, exprs: Seq[Expression], arities: Int*)(i: Int, param: String): Int = {
+    if (!arities.contains(exprs.length))
+      throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+        "functionName" -> s"`$fn`", "expectedNum" -> arities.mkString(" or "),
+        "actualNum" -> exprs.length.toString, "docroot" -> "https://spark.apache.org/docs/latest"))
+    val e = exprs(i)
+    if (!e.foldable)
+      throw new AnalysisException("NON_FOLDABLE_ARGUMENT", Map(
+        "funcName" -> s"`$fn`", "paramName" -> s"`$param`", "paramType" -> "\"INT\""))
+    val v = e.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => e.eval(null)
+      case _ => null
+    }
+    if (v == null)
+      throw new AnalysisException("UNEXPECTED_INPUT_TYPE", Map(
+        "paramIndex" -> (i + 1).toString, "functionName" -> s"`$fn`", "requiredType" -> "\"INT\"",
+        "inputSql" -> s"\"${e.sql}\"", "inputType" -> s"\"${e.dataType.sql}\""))
+    v.asInstanceOf[Number].intValue()
+  }
 
   private def info(name: String): ExpressionInfo =
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, null, "", "", "", "", "", "", "scala_udf")

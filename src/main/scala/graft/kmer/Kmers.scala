@@ -18,11 +18,20 @@ import graft.{EngineQuery, Tables}
   * `'\0'` file barrier (`src/GPU_Module/GPU.cpp:36-40`) is free here:
   * windows are generated per row, and a row never spans files.
   *
+  * Counting ([[kmerCounts]]) does not key on the window string: an ACGT
+  * window with k <= 32 is a 2-bit packed BIGINT code, and a long DNA
+  * row pre-counts its leading ACGT run before the aggregate sees it
+  * ([[KmerCodeGenerator]]). Strings come back once per output row,
+  * above the final aggregate and after any count filter.
+  *
   * Scale notes (100 TB): the explode is the only expansion point — a
-  * k-char window per input character. Aggregation shuffles on `word`,
-  * with map-side partial aggregation collapsing the k^|alphabet| key
+  * k-char window per input character, or at most 4^k pre-counted codes
+  * plus the windows past the ACGT run for a long DNA row at k <= 10.
+  * Aggregation shuffles on the 8-byte code (a string only for non-ACGT
+  * windows), with map-side partial aggregation collapsing the 4^k key
   * space before the exchange, so shuffle volume is bounded by distinct
-  * k-mers per partition, not corpus size. No driver-side state.
+  * k-mers per partition, not corpus size. Decoding costs one k-byte
+  * string per output row. No driver-side state.
   */
 object Kmers {
   /** Max window width, kept for semantic parity with the reference's
@@ -53,27 +62,44 @@ object Kmers {
     * window array). The DEFAULT path: measured ≥ the explode
     * formulation at k ∈ {3, 8, 21} ([[KmerBench]]).
     */
-  def kmersGen(df: DataFrame, textCol: String, k: Int): DataFrame = {
+  def kmersGen(df: DataFrame, textCol: String, k: Int): DataFrame =
+    generate(df, textCol, k, s"kmer_windows($textCol, $k) AS word")
+
+  /** The rows of `generator` over the texts with at least one window. */
+  private def generate(df: DataFrame, textCol: String, k: Int, generator: String): DataFrame = {
     require(k >= 1 && k <= MaxK, s"k must be in [1, $MaxK], got $k")
     graft.GraftFunctions.register(df.sparkSession)
-    graft.Partitioning.fanOut(df.where(length(col(textCol)) >= k))
-      .selectExpr(s"kmer_windows($textCol, $k) AS word")
+    graft.Partitioning.fanOut(df.where(length(col(textCol)) >= k)).selectExpr(generator)
   }
 
   /** k-mer → occurrence count (the full Map+Reduce, reference
-    * `src/main.cpp:105-248`). Output: (word STRING, cnt BIGINT).
+    * `src/main.cpp:105-248`). Output: (word STRING NOT NULL, cnt BIGINT
+    * NOT NULL).
+    *
+    * Aggregates `kmer_codes` rows on (code, word): ACGT windows as
+    * packed codes, every other window as its string, each key decided by
+    * the window's content alone, so one pass is exact. `kmer_decode`
+    * runs in the projection above the final aggregate — per output row,
+    * and after a filter on `cnt` such as [[thresholded]]'s, which
+    * Catalyst places below this projection.
     */
   def kmerCounts(df: DataFrame, textCol: String, k: Int): DataFrame =
-    kmersGen(df, textCol, k).groupBy("word").agg(count(lit(1)).as("cnt"))
+    generate(df, textCol, k, s"kmer_codes($textCol, $k)")
+      .groupBy("code", "word").agg(sum("n").as("n"))
+      .select(
+        coalesce(col("word"), expr(s"kmer_decode(code, $k)")).as("word"),
+        // sum is nullable to Catalyst; every group has n >= 1
+        coalesce(col("n"), lit(0L)).as("cnt"))
 
   /** Reference-faithful output relation: counts > 1, deduped, formatted
     * sort (reference `print_mapped_counts`, `src/main.cpp:55-73`).
     */
   def thresholded(df: DataFrame, textCol: String, k: Int, minCount: Long = 1): DataFrame =
-    kmerCounts(df, textCol, k)
-      .where(col("cnt") > minCount && col("word") =!= "")
-  // (the reference's output dedup, src/main.cpp:65-70, is already
-  // guaranteed by groupBy("word") — no extra dropDuplicates pass)
+    kmerCounts(df, textCol, k).where(col("cnt") > minCount)
+  // No `word <> ''` filter: k >= 1, so no window is empty, and Catalyst
+  // would push that predicate below the aggregate and decode every
+  // window to test it. The reference's output dedup (src/main.cpp:65-70)
+  // is already guaranteed by the grouping.
 
   /** Total window count = sum of all v (dead reference code
     * `compute_unique_total`, `src/main.cpp:47-53`, kept as the cleanest

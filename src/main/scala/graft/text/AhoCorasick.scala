@@ -5,9 +5,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, CollectionGenerator, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.ReadOnlyArrayData
 
 /** Aho–Corasick multi-pattern literal matching (Aho & Corasick 1975,
   * "Efficient String Matching: An Aid to Bibliographic Search", CACM)
@@ -165,34 +165,12 @@ object AhoCorasick {
 /** Eager (pid, pos) rows; same read-only contract as
   * [[RollingHashRows]].
   */
-final class ACMatchRows(val pids: Array[Int], val poss: Array[Int]) extends ArrayData {
+final class ACMatchRows(val pids: Array[Int], val poss: Array[Int]) extends ReadOnlyArrayData {
   override def numElements(): Int = pids.length
   override def getStruct(i: Int, numFields: Int): InternalRow =
     new GenericInternalRow(Array[Any](pids(i), poss(i)))
-  override def isNullAt(i: Int): Boolean = false
   override def get(ordinal: Int, dataType: DataType): AnyRef = getStruct(ordinal, 2)
   override def array: Array[Any] = Array.tabulate[Any](pids.length)(getStruct(_, 2))
-  override def copy(): ArrayData = new GenericArrayData(array)
-  private def unsupported(): Nothing =
-    throw new UnsupportedOperationException("AC match rows are struct-typed and read-only")
-  override def setNullAt(i: Int): Unit = unsupported()
-  override def update(i: Int, value: Any): Unit = unsupported()
-  override def getBoolean(i: Int): Boolean = unsupported()
-  override def getByte(i: Int): Byte = unsupported()
-  override def getShort(i: Int): Short = unsupported()
-  override def getInt(i: Int): Int = unsupported()
-  override def getLong(i: Int): Long = unsupported()
-  override def getFloat(i: Int): Float = unsupported()
-  override def getDouble(i: Int): Double = unsupported()
-  override def getDecimal(i: Int, precision: Int, scale: Int): org.apache.spark.sql.types.Decimal = unsupported()
-  override def getBinary(i: Int): Array[Byte] = unsupported()
-  override def getUTF8String(i: Int): UTF8String = unsupported()
-  override def getGeography(i: Int): org.apache.spark.unsafe.types.GeographyVal = unsupported()
-  override def getGeometry(i: Int): org.apache.spark.unsafe.types.GeometryVal = unsupported()
-  override def getInterval(i: Int): org.apache.spark.unsafe.types.CalendarInterval = unsupported()
-  override def getVariant(i: Int): org.apache.spark.unsafe.types.VariantVal = unsupported()
-  override def getArray(i: Int): ArrayData = unsupported()
-  override def getMap(i: Int): org.apache.spark.sql.catalyst.util.MapData = unsupported()
 }
 
 /** Generator `ac_matches(text, 'p1|p2|…')` → rows (pid INT, pos INT).

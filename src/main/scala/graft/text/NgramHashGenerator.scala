@@ -4,8 +4,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, GenericInternalRow, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructType}
+import graft.functions.ReadOnlyArrayData
 
 /** Lazily-evaluated ArrayData of `(n, gh, glen)` rows for every
   * word-n-gram window of a token array, n ∈ [minN, maxN] — the n-gram
@@ -26,7 +27,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * block lookup O(1) amortized. Construction is O(T) in the token
   * count; element access allocates only the 3-field output row.
   */
-final class NgramHashArrayData(toks: ArrayData, minN: Int, maxN: Int) extends ArrayData {
+final class NgramHashArrayData(toks: ArrayData, minN: Int, maxN: Int) extends ReadOnlyArrayData {
   private[this] val t: Int = toks.numElements()
   // prefix polynomial hashes and prefix char lengths
   private[this] val hp: Array[Long] = new Array[Long](t + 1)
@@ -72,32 +73,9 @@ final class NgramHashArrayData(toks: ArrayData, minN: Int, maxN: Int) extends Ar
     new GenericInternalRow(Array[Any](n, gh, glen))
   }
 
-  override def isNullAt(i: Int): Boolean = false
   override def get(ordinal: Int, dataType: DataType): AnyRef = getStruct(ordinal, 3)
 
   override def array: Array[Any] = Array.tabulate[Any](total)(i => getStruct(i, 3))
-  override def copy(): ArrayData = new GenericArrayData(array)
-
-  private def unsupported(): Nothing =
-    throw new UnsupportedOperationException("ngram hash rows are struct-typed and read-only")
-  override def setNullAt(i: Int): Unit = unsupported()
-  override def update(i: Int, value: Any): Unit = unsupported()
-  override def getBoolean(i: Int): Boolean = unsupported()
-  override def getByte(i: Int): Byte = unsupported()
-  override def getShort(i: Int): Short = unsupported()
-  override def getInt(i: Int): Int = unsupported()
-  override def getLong(i: Int): Long = unsupported()
-  override def getFloat(i: Int): Float = unsupported()
-  override def getDouble(i: Int): Double = unsupported()
-  override def getDecimal(i: Int, precision: Int, scale: Int): org.apache.spark.sql.types.Decimal = unsupported()
-  override def getBinary(i: Int): Array[Byte] = unsupported()
-  override def getUTF8String(i: Int): org.apache.spark.unsafe.types.UTF8String = unsupported()
-  override def getGeography(i: Int): org.apache.spark.unsafe.types.GeographyVal = unsupported()
-  override def getGeometry(i: Int): org.apache.spark.unsafe.types.GeometryVal = unsupported()
-  override def getInterval(i: Int): org.apache.spark.unsafe.types.CalendarInterval = unsupported()
-  override def getVariant(i: Int): org.apache.spark.unsafe.types.VariantVal = unsupported()
-  override def getArray(i: Int): ArrayData = unsupported()
-  override def getMap(i: Int): org.apache.spark.sql.catalyst.util.MapData = unsupported()
 }
 
 object NgramHashArrayData {

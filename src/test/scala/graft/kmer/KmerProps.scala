@@ -57,4 +57,75 @@ object KmerProps extends Properties("Kmers") {
           .groupBy(identity).view.mapValues(_.size.toLong).toMap
         engine == naive
     }
+
+  // Mixed alphabets for the packed-code path: ACGT windows pack, windows
+  // with N, lowercase or multibyte chars stay strings. Long rows (at
+  // least 4^k + k - 1 chars at k <= 8) enter the dense prefix count;
+  // their non-ACGT chars sit at the row's start, middle or end, so the
+  // leading ACGT run ends at byte 0, mid-row, near the end or not at all.
+  private val mixedChars = Seq('A', 'C', 'G', 'T', 'N', 'a', 'é', '日')
+  private val genMixedK: Gen[Int] = Gen.oneOf((1 to 8) ++ Seq(15, 16, 31, 32, 33))
+
+  private def genShortMixed: Gen[String] =
+    Gen.chooseNum(0, 40).flatMap(n => Gen.listOfN(n, Gen.oneOf(mixedChars)).map(_.mkString))
+
+  private def genLongMixed(k: Int): Gen[String] = for {
+    extra <- Gen.chooseNum(0, 16)
+    len = (1 << (2 * k)) + k - 1 + extra
+    seed <- Gen.long
+    marks <- Gen.listOf(Gen.zip(Gen.oneOf("start", "middle", "end"), Gen.oneOf('N', 'a', 'é', '日')))
+  } yield {
+    val rnd = new scala.util.Random(seed)
+    val cs = Array.fill(len)("ACGT".charAt(rnd.nextInt(4)))
+    marks.take(3).foreach { case (where, c) =>
+      val at = where match {
+        case "start" => rnd.nextInt(3)
+        case "middle" => len / 2 - 2 + rnd.nextInt(5)
+        case _ => len - 1 - rnd.nextInt(3)
+      }
+      cs(at) = c
+    }
+    new String(cs)
+  }
+
+  private val genMixedCase: Gen[(List[String], Int)] = for {
+    k <- genMixedK
+    short <- Gen.chooseNum(0, 6).flatMap(Gen.listOfN(_, genShortMixed))
+    long <- if (k <= 8) Gen.chooseNum(1, 2).flatMap(Gen.listOfN(_, genLongMixed(k))) else Gen.const(Nil)
+  } yield (short ++ long, k)
+
+  private def naiveCounts(texts: Seq[String], k: Int): Map[String, Long] =
+    texts.flatMap(cpWindows(_, k)).groupBy(identity).view.mapValues(_.size.toLong).toMap
+
+  private def engineCounts(texts: Seq[String], k: Int): Map[String, Long] = {
+    import spark.implicits._
+    Kmers.kmerCounts(texts.toDF("text"), "text", k)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+  }
+
+  property("mixed-alphabet rows match the naive model and the count invariant") =
+    forAll(genMixedCase) { case (texts, k) =>
+      val engine = engineCounts(texts, k)
+      val total = texts.map(t => math.max(0, t.codePointCount(0, t.length) - k + 1).toLong).sum
+      engine == naiveCounts(texts, k) && engine.values.sum == total
+    }
+
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val before = kv.map { case (key, _) => key -> spark.conf.getOption(key) }
+    kv.foreach { case (key, v) => spark.conf.set(key, v) }
+    try body
+    finally before.foreach {
+      case (key, Some(v)) => spark.conf.set(key, v)
+      case (key, None) => spark.conf.unset(key)
+    }
+  }
+
+  property("kmer_codes and kmer_decode agree on the interpreted and codegen paths") =
+    forAll(genMixedCase) { case (texts, k) =>
+      val interpreted = withConf(
+        "spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(engineCounts(texts, k))
+      val codegen = withConf("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(engineCounts(texts, k))
+      interpreted == codegen && codegen == naiveCounts(texts, k)
+    }
 }

@@ -1,6 +1,11 @@
 package graft.kmer
 
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.TestSpark
@@ -80,7 +85,105 @@ class KmersSpec extends AnyFunSuite with Matchers {
       // AQE applies codegen collapse per stage — assert on the FINAL plan;
       // codegen'd operators carry the `*(n)` prefix
       df.queryExecution.executedPlan.toString should include regex """\*\(\d+\) Generate"""
+
+      // the counting path: kmer_codes and kmer_decode, both codegen'd
+      val counts = Kmers.kmerCounts(Seq("GATTACA", "GATTNCA").toDF("text"), "text", 3)
+      counts.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe Map(
+        "GAT" -> 2L, "ATT" -> 2L, "TTA" -> 1L, "TAC" -> 1L, "ACA" -> 1L,
+        "TTN" -> 1L, "TNC" -> 1L, "NCA" -> 1L)
+      counts.queryExecution.executedPlan.toString should include regex """\*\(\d+\) Generate kmer_codes"""
+      val stages = new AdaptiveSparkPlanHelper {}
+        .collect(counts.queryExecution.executedPlan) { case w: WholeStageCodegenExec => w }
+      stages.exists(_.child.exists(_.expressions.exists(_.exists(_.isInstanceOf[KmerDecode])))) shouldBe true
     } finally spark.conf.set("spark.sql.codegen.fallback", "true")
+  }
+
+  private def decodes(p: LogicalPlan): Boolean =
+    p.expressions.exists(_.exists(_.isInstanceOf[KmerDecode]))
+
+  test("kmer_decode runs only above the aggregate, after thresholded's count filter") {
+    val df = Kmers.thresholded(Seq("ACGTACGTNACGT", "acgtACGT").toDF("text"), "text", 4)
+    val plan = df.queryExecution.optimizedPlan
+    val agg = plan.collectFirst { case a: Aggregate => a }.get
+    agg.aggregateExpressions.exists(_.exists(_.isInstanceOf[KmerDecode])) shouldBe false
+    agg.child.exists(decodes) shouldBe false
+    // the decode's projection reads the count filter's output, which reads the aggregate
+    val proj = plan.collectFirst { case p: Project if decodes(p) => p }.get
+    proj.child should matchPattern { case Filter(_, _: Aggregate) => }
+    df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe Map("ACGT" -> 4L)
+  }
+
+  test("kmerCounts and thresholded keep the (word STRING NOT NULL, cnt BIGINT NOT NULL) schema") {
+    val schema = StructType(Seq(
+      StructField("word", StringType, nullable = false), StructField("cnt", LongType, nullable = false)))
+    val df = Seq("ACGTN").toDF("text")
+    Kmers.kmerCounts(df, "text", 2).schema shouldBe schema
+    Kmers.thresholded(df, "text", 2).schema shouldBe schema
+    Kmers.kmerCounts(df, "text", 40).schema shouldBe schema
+  }
+
+  test("a long DNA row's dense prefix count matches the string windows") {
+    // 4^3 + 2 ACGT chars enter the dense count at k = 3; the N and the
+    // lowercase tail go out one window at a time
+    val rnd = new scala.util.Random(7)
+    val dna = Seq.fill(200)("ACGT".charAt(rnd.nextInt(4))).mkString
+    val corpus = Seq(dna, dna + "N" + dna.take(9) + "acg", "N" + dna, dna.take(66))
+    for (k <- Seq(1, 3)) {
+      counts(corpus, k) shouldBe corpus.flatMap(_.sliding(k).filter(_.length == k))
+        .groupBy(identity).view.mapValues(_.size.toLong).toMap
+    }
+  }
+
+  test("kmer_codes rows: packed ACGT windows, string windows otherwise") {
+    val rows = spark.sql("SELECT kmer_codes('ACGTNa', 2)").collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2))).toSeq
+    rows shouldBe Seq((1L, None, 1L), (6L, None, 1L), (11L, None, 1L),
+      (0L, Some("TN"), 1L), (0L, Some("Na"), 1L))
+    spark.sql("SELECT kmer_decode(11L, 2), kmer_decode(-1L, 32), kmer_decode(0L, 1)").collect()(0).toSeq shouldBe
+      Seq("GT", "T" * 32, "A")
+  }
+
+  // Argument checks: a bad call fails analysis with an error naming the
+  // function, for every k-mer builder.
+  private val kmerFns = Seq("kmer_windows", "kmer_windows_pos", "kmer_codes", "kmer_decode")
+  private def argCol(fn: String): String = if (fn == "kmer_decode") "code" else "text"
+
+  private def analysisError(sql: String): AnalysisException = {
+    Seq(("ACGT", 3L, 2)).toDF("text", "code", "k").createOrReplaceTempView("kmer_args")
+    intercept[AnalysisException](spark.sql(sql).collect())
+  }
+
+  test("k-mer builders reject a non-foldable k with an analysis error naming the function") {
+    for (fn <- kmerFns) {
+      val e = analysisError(s"SELECT $fn(${argCol(fn)}, k) FROM kmer_args")
+      e.errorClass shouldBe Some("NON_FOLDABLE_ARGUMENT")
+      e.getMessage should include(s"`$fn`")
+    }
+  }
+
+  test("k-mer builders reject a missing k with an analysis error naming the function") {
+    for (fn <- kmerFns) {
+      val e = analysisError(s"SELECT $fn(${argCol(fn)}) FROM kmer_args")
+      e.errorClass shouldBe Some("WRONG_NUM_ARGS.WITHOUT_SUGGESTION")
+      e.getMessage should include(s"`$fn`")
+    }
+  }
+
+  test("k-mer builders reject a non-integer k with an analysis error naming the function") {
+    for (fn <- kmerFns; k <- Seq("'x'", "NULL", "1.5")) {
+      val e = analysisError(s"SELECT $fn(${argCol(fn)}, $k) FROM kmer_args")
+      e.errorClass shouldBe Some("UNEXPECTED_INPUT_TYPE")
+      e.getMessage should include(s"`$fn`")
+    }
+  }
+
+  test("the other literal-argument builders check their arity by name") {
+    for (call <- Seq("ngram_hashes(text, 2)", "rolling_hashes(text)", "winnow_fingerprints(text, 3)",
+                     "unigram_segment(text, text)", "common_run_len(text, 1, text, 1, 1)")) {
+      val e = analysisError(s"SELECT $call FROM kmer_args")
+      e.errorClass shouldBe Some("WRONG_NUM_ARGS.WITHOUT_SUGGESTION")
+      e.getMessage should include("`" + call.takeWhile(_ != '(') + "`")
+    }
   }
 
   test("KmerGenerator handles multibyte text (char windows, not byte windows)") {

@@ -46,7 +46,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
     // Optional name filter (comma-separated) for ad-hoc single-query runs.
     // Computed BEFORE the SparkSession (Registry holds lambdas only) so
@@ -54,85 +54,6 @@ object Bench {
     // itself wedges on a hostile host.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // Measured-coverage-first ordering: the global deadline truncates
-    // the TAIL of the run, so the historically cheapest queries go
-    // first — a contended host measures the most queries possible
-    // before any kill, and the expensive ones it skips are the ones a
-    // kill would have taken out anyway. Costs are idle local[32]
-    // min-of-5 best seconds (r10, BASELINE.md trend row); queries not
-    // listed (new since) run last in registry order (sortBy is stable)
-    // — they are also the ones with no prior round to compare against.
-    val expectedSec: Map[String, Double] = Map(
-      "salted_group_count" -> 0.43, "events_hourly_rollup" -> 0.44,
-      "range_join_value_bands" -> 0.46, "kmeans_step" -> 0.48,
-      "ann_brute_topk" -> 0.50, "join_broadcast_revenue" -> 0.59,
-      "text_token_stats" -> 0.60, "stateful_sessionize" -> 0.61,
-      "shuffle_order" -> 0.62, "kmer_count" -> 0.67,
-      "ann_lsh_multiprobe" -> 0.68, "join_shuffle_lineitem_orders" -> 0.90,
-      "heavy_hitters" -> 0.95, "asof_event_last_order" -> 1.09,
-      "token_budget_select" -> 1.17, "minhash_signatures" -> 1.19,
-      "q1_pricing_summary" -> 1.19, "decontaminate_overlap" -> 1.21,
-      "kmeans_converged" -> 1.54, "bpe_learn_merges" -> 1.76,
-      "simhash_neardup_pairs" -> 1.89, "gopher_repetition_ngrams" -> 1.96,
-      "line_dedup_corpus" -> 2.00, "substring_dup_stats" -> 2.56,
-      "semdedup_prune" -> 2.66, "neardup_components" -> 2.77,
-      "skew_join_hot_key" -> 2.81, "bloom_semi_join_pruned" -> 3.15,
-      "curated_corpus" -> 3.77,
-      // r11 headline promotions, min-of-5 from the r11 builder run
-      "sample_weighted_priority" -> 0.24, "embedding_dim_stats" -> 0.30,
-      "lang_adaptive_cut" -> 0.38, "cdc_agg_maintain" -> 0.52,
-      "sql_recursive_reachability" -> 1.44,
-      // r11 new-operator promotions, min-of-passes from the r11 builder run
-      "dsir_importance_select" -> 0.53, "dq_constraint_audit" -> 0.85,
-      "curation_funnel" -> 1.00, "ccnet_perplexity_buckets" -> 2.69,
-      "graph_pagerank_parts" -> 4.78,
-      // r11 late adds, min-of-5 ad-hoc builder run
-      "embedding_sq8_recall" -> 1.31, "graph_triangle_counts" -> 1.75,
-      "cusum_revenue_shift" -> 0.65, "graph_kcore_nodes" -> 2.49,
-      "hybrid_search_rrf" -> 2.66,
-      // r11 final adds, min-of-5 ad-hoc builder run
-      "assoc_rules_lift" -> 1.57, "containment_dup_pairs" -> 1.79,
-      "concurrent_sessions_peak" -> 1.35,
-      // r11 closing add: the composed events dashboard
-      "events_kpi_snapshot" -> 1.71,
-      // r12 promotions: retention matrix (one-shuffle collect_set
-      // shape), the 6-table Q5 star join, the eager-aggregation skew
-      // twin (the round's probe-finding fix — its trend is the
-      // evidence the fix holds), and the composed drift report;
-      // min-of-5 ad-hoc builder runs
-      "cohort_retention" -> 0.41, "sql_q5_local_supplier" -> 1.18,
-      "skew_join_preagg" -> 0.96, "snapshot_acceptance" -> 0.62,
-      // r12 closing promotions: the suite-completing TPC-H adds with
-      // the two hardest plan shapes (8-relation star; EXISTS+NOT EXISTS
-      // double correlation); min-of-5 ad-hoc builder runs
-      "sql_q8_market_share" -> 0.88, "sql_q21_waiting_suppliers" -> 1.15,
-      // r13 promotions: the join-free KMV sketch overlap and the
-      // sorted-neighborhood blocking rank join; min-of-3 ad-hoc runs
-      "kmv_cohort_overlap" -> 0.38, "snm_neardup_pairs" -> 1.15,
-      // r13: winnowing fingerprint extraction (map-stage selection);
-      // min-of-5 ad-hoc builder run
-      "winnow_fingerprint_stats" -> 0.83,
-      // r13: Aho-Corasick blocklist scan (dictionary-size-free map
-      // stage) and the bounded-state exact percentile; min-of-5 ad-hoc
-      "blocklist_match_stats" -> 0.88, "percentile_exact_twopass" -> 0.90,
-      // r13: WordPiece greedy inference (trie in the map stage)
-      "wordpiece_stats" -> 1.06,
-      // r15 promotions, min over the two merged builder-close runs:
-      // the reworked unigram apply (the 5.0->3.3 claim needs driver
-      // trend evidence), the new exact-substring operator, and the
-      // stride-scheduled curriculum order
-      "unigram_tokenize_stats" -> 3.29, "longest_dup_substring" -> 3.10,
-      "curriculum_interleave" -> 0.72,
-      // r17 from-saved APPLY-ONLY readings (train+persist moved to the
-      // untimed setup half; min-of-4 ad-hoc builder run) + isotonic
-      "unigram_tokenize_from_saved" -> 1.96, "bpe_tokenize_from_saved" -> 1.36,
-      "perceptron_confusion_from_saved" -> 1.62,
-      "perceptron_isotonic_calibration" -> 3.60, "ann_ivf_from_saved" -> 0.94,
-      // r16 adds, min-of-5 ad-hoc builder runs (FULL-mode ordering)
-      "trigram_backoff_fluency" -> 2.23, "unimax_budget" -> 0.79,
-      "rouge_l_eval" -> 2.15,
-      // r17 adds, min-of-5 ad-hoc builder runs (FULL-mode ordering)
-      "url_dedup_groups" -> 1.33, "host_quality_filter" -> 2.96)
     // r14 (verdict item 1): the headline set grew to 60 queries and the
     // r13 driver run degraded to ONE pass per query — single-pass
     // numbers on a contended host are noise (r13 read as a 2.4×
@@ -176,24 +97,17 @@ object Bench {
     // SPARK_GRAFT_BENCH_ONLY resolves against the FULL registry, not
     // just the headline set — ad-hoc timing of a not-yet-promoted query
     // shouldn't require editing headline flags first.
-    val headline = (only match {
+    val headline = only match {
       case Some(names) => Registry.all.filter(q => names.contains(q.name))
       case None =>
         Registry.all.filter(q =>
           q.headline && (fullHeadline || trendSet.contains(q.name)))
-    }).sortBy(q => expectedSec.getOrElse(q.name, Double.MaxValue))
+    }
+    // The first sweep runs in registry order: the default run fits
+    // several full sweeps inside the deadline, so no order is needed to
+    // protect it. Extra sweeps go cheapest-first by measured best.
     val order = headline.map(_.name)
-    // Staleness tripwire: the cheapest-first map is hand-maintained, so
-    // a renamed headline query (or a stale entry) would silently fall to
-    // the back of the order with no signal. Surface both directions in
-    // stderr — the bench still runs, but the drift is visible.
-    val unmapped = headline.filter(q => !expectedSec.contains(q.name)).map(_.name)
-    if (unmapped.nonEmpty)
-      System.err.println(s"[bench] headline queries missing from expectedSec (run last, in registry order): ${unmapped.mkString(", ")}")
     val registered = Registry.all.map(_.name).toSet
-    val stale = expectedSec.keys.filterNot(registered.contains).toSeq.sorted
-    if (stale.nonEmpty)
-      System.err.println(s"[bench] expectedSec entries matching no registered query (stale): ${stale.mkString(", ")}")
     val staleTrend = trendSet.filterNot(registered.contains).toSeq.sorted
     if (staleTrend.nonEmpty)
       System.err.println(s"[bench] trendSet entries matching no registered query (stale): ${staleTrend.mkString(", ")}")
@@ -351,17 +265,8 @@ object Bench {
     // session startup never returns.
     emitArtifact(artifactLine(partial = true))
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus)
     sparkRef.set(spark)
-    spark.sparkContext.setLogLevel("WARN")
 
     // Per-query wall budget: one pathological query must never zero the
     // whole artifact. A pass that exceeds the budget has its Spark jobs
@@ -392,15 +297,12 @@ object Bench {
     // checkpoint blocks a query failed to release would otherwise
     // crowd the storage pool and degrade every LATER query — the
     // r6 failure mode. Runs on the pool with a short bound because
-    // clearCache() can block behind a cancelled stage's draining
+    // clearing the cache can block behind a cancelled stage's draining
     // tasks — the r7 wedge that kept the main loop from ever
     // reaching its next deadline check.
     def cleanupStorage(): Unit = {
       val f = runPool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = {
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        }
+        def call(): Unit = GraftSession.releaseStorage(spark)
       })
       try f.get(15, java.util.concurrent.TimeUnit.SECONDS)
       catch {
@@ -490,14 +392,9 @@ object Bench {
     // contended window self-evident from the artifact alone.
     val passMetrics =
       new java.util.concurrent.ConcurrentHashMap[String, Seq[(Double, Seq[(String, Long)], Double)]]()
-    def loadAvg1: Double =
-      try {
-        val src = scala.io.Source.fromFile("/proc/loadavg")
-        try src.getLines().next().split("\\s+")(0).toDouble finally src.close()
-      } catch { case _: Throwable => -1.0 }
     def measuredPass(q: EngineQuery): (Double, Double) = {
       profiler.reset(sc)
-      val load = loadAvg1
+      val load = ProcStatus.loadAvg1
       // A failed query records sentinel -1, never a bogus partial time.
       val sec =
         if (pastDeadline) {
@@ -587,12 +484,12 @@ object Bench {
     var extraPass = passes
     var exhausted = false
     while (extraPass < maxPasses && !exhausted && !pastDeadline) {
-      // Cheapest-first by best-so-far (expected cost for never-measured
-      // queries); failed-so-far queries go LAST — their retries must
-      // not displace a healthy query's pass k.
+      // Cheapest-first by best-so-far; never-measured and failed-so-far
+      // queries go LAST, in registry order — their retries must not
+      // displace a healthy query's pass k.
       val sweep = headline.sortBy { q =>
         val b = Option(bestSec.get(q.name)).getOrElse(-1.0)
-        if (b > 0) b else 1e6 + expectedSec.getOrElse(q.name, 1e3)
+        if (b > 0) b else Double.MaxValue
       }
       // `attempted` (any pass RAN) keeps the phase alive — a sweep where
       // every attempted re-run happens to fail transiently must not end
@@ -684,15 +581,4 @@ object Bench {
     stopper.join(30000)
     Runtime.getRuntime.halt(0)
   }
-}
-
-/** /proc/self/status reader shared by Bench and ScaleProbe. */
-object ProcStatus {
-  def rssMb(key: String): Long =
-    try {
-      val src = scala.io.Source.fromFile("/proc/self/status")
-      try src.getLines().find(_.startsWith(key + ":"))
-        .map(_.replaceAll("[^0-9]", "").toLong / 1024).getOrElse(-1L)
-      finally src.close()
-    } catch { case _: Throwable => -1L }
 }

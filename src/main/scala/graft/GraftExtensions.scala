@@ -22,10 +22,6 @@ object GraftFunctions {
       val k = intArg("kmer_windows", exprs, 2)(1, "k")
       kmer.KmerGenerator(exprs.head, k)
     },
-    "kmer_windows_pos" -> { exprs =>
-      val k = intArg("kmer_windows_pos", exprs, 2)(1, "k")
-      kmer.KmerGenerator(exprs.head, k, withPos = true)
-    },
     // kmer_codes(text, k): (code, word, n) rows — ACGT windows packed
     // 2 bits a base, other windows as strings; see kmer.KmerCodeGenerator
     "kmer_codes" -> { exprs =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -59,15 +58,7 @@ object Main {
     val par = if (requested >= 1 && requested <= cores) requested else cores
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$par]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", par)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(par)
 
     // The reference concatenates the corpus and truncates at N chars;
     // here the running character total is cut at N row-wise — same

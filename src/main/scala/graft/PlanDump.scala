@@ -4,16 +4,13 @@ import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round plan snapshots: dump `explain("formatted")` for
   * the named queries into one file each — the before/after evidence
   * files under plans/<round>/ that the judge diffs plan claims against.
   *
-  * Unlike [[Plans]] (the audited-property artifact), this main uses the
-  * SAME session configuration as [[Bench]] (GraftExtensions + AQE +
-  * cpus-keyed shuffle partitions), so the dumped plan is the plan the
-  * bench actually times.
+  * Unlike [[Plans]] (the audited-property artifact), this main defaults
+  * to [[Bench]]'s sf0.1 directory, so with the same `SPARK_GRAFT_CPUS`
+  * the dumped plan is the plan the bench actually times.
   *
   * usage: runMain graft.PlanDump <outDir> <suffix> <name>[,<name>...]
   *   env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
@@ -25,17 +22,7 @@ object PlanDump {
     val Array(outDir, suffix, namesCsv) = args.take(3)
     val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     Files.createDirectories(Paths.get(outDir))
     val byName = Registry.all.map(q => q.name -> q).toMap
     names.foreach { name =>
@@ -56,10 +43,7 @@ object PlanDump {
             case e: Throwable =>
               System.err.println(s"[plandump] $name failed: ${e.getMessage}")
           } finally {
-            try {
-              spark.sharedState.cacheManager.clearCache()
-              spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-            } catch { case _: Throwable => () }
+            try GraftSession.releaseStorage(spark) catch { case _: Throwable => () }
           }
       }
     }

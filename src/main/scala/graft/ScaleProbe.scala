@@ -364,46 +364,68 @@ object ScaleProbe {
     val copies = sys.env.getOrElse("SPARK_GRAFT_PROBE_COPIES", "10").toInt
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PROBE_DIR",
       if (copies == 10) "/tmp/graft_probe_sf1" else s"/tmp/graft_probe_x$copies")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     materialize(spark, srcDir, outDir, copies)
+    // The exact similarity join's verification cost is linear in its
+    // CANDIDATE set, and on this probe corpus (every document has
+    // `copies` rotated near-identical copies — token sets nearly
+    // preserved) the candidate clique mass genuinely grows
+    // ~copies²·near-dup-density while the ≥t output does not. That is
+    // the inherent cost of EXACTNESS on a near-dup-dense corpus; the
+    // engine's probabilistic paths (MinHash banding with hot caps) are
+    // the 100 TB route there, and stay linear above.
+    val workMeasure: Map[String, String => Double] = Map(
+      "setsim_jaccard_join" -> { dir: String =>
+        graft.dedup.SetSimJoin.candidateCount(
+          spark.read.parquet(s"$dir/documents.parquet")
+            .where(col("doc_id") % graft.dedup.SetSimJoin.GateDocFilter === 0))
+          .collect()(0).getLong(0).toDouble
+      })
+    // flag_rule states the criterion IN the artifact: an empty flag
+    // list means "no query's time ratio exceeded max(2.5*copies, 2.5x
+    // its rows/work growth)" — not "all ratios ~1x".
+    probe(spark, srcDir, outDir, ProbeQueries, copies.toDouble, "probe_sec", "rows_probe",
+      s""""metric":"scale_probe","copies":$copies,"flag_rule":"time_ratio>max(2.5*copies,2.5*max(rows_ratio,work_ratio))"""",
+      workMeasure)
+    spark.stop()
+  }
 
-    // Optional name filter (comma-separated) for ad-hoc re-probes of
-    // single queries after a fix — the full probe is minutes.
+  /** The probe loop both probes run. Each query in `queries` (narrowed
+    * by the comma-separated `SPARK_GRAFT_PROBE_ONLY`, for ad-hoc
+    * re-probes of single queries after a fix — the full probe is
+    * minutes) is timed on `srcDir` and on the materialized `probeDir`,
+    * min-of-2 after one warm-up each, with the untimed setup half of
+    * `*_from_saved` queries first (the probed ratio is then the APPLY's
+    * scaling, matching what Bench measures). Prints one line per query
+    * (`secKey` names its probe-side seconds), then the flag lines and
+    * one summary line that starts with the fields of `summary`.
+    *
+    * A time ratio must be judged against the operator's WORK growth
+    * before calling it superlinear: an operator whose true answer grows
+    * faster than `dataRatio` legitimately spends time proportional to
+    * the rows it must emit (`rowsKey` names its probe-side row count),
+    * and `workMeasure` gives a per-query work count where output rows
+    * understate the work. A query is flagged only when its time ratio
+    * outgrows 2.5× the data ratio, its output AND its work.
+    */
+  def probe(spark: SparkSession, srcDir: String, probeDir: String, queries: Seq[String],
+            dataRatio: Double, secKey: String, rowsKey: String, summary: String,
+            workMeasure: Map[String, String => Double] = Map.empty): Unit = {
     val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val probeQueries = ProbeQueries.filter(q => only.forall(_.contains(q)))
-
     val byName = Registry.all.map(q => q.name -> q).toMap
     // Row counts ride on the TIMED pass via Dataset.observe (a
     // CollectMetrics node computed during the same execution) — the
-    // superlinearity denominator below never re-executes a query just
-    // to count its output.
+    // superlinearity denominator below re-executes a query only if its
+    // observation is missing.
     val observed = Observed.install(spark)
     def cntKey(name: String, dir: String) = s"cnt:$name:$dir"
     def time(name: String, dir: String): Double = {
       val q = byName(name)
-      // Untimed setup half first (`*_from_saved` train+persist): the
-      // probed ratio is then the APPLY's scaling, matching what Bench
-      // measures; the train's scaling is carried by the learner queries
-      // probed in their own right.
       q.setup.foreach { su =>
         try su(spark, dir)
         catch { case e: Throwable => System.err.println(s"[probe] $name setup: ${e.getMessage}") }
-        finally {
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        }
+        finally GraftSession.releaseStorage(spark)
       }
       def once(): Double = {
         val t0 = System.nanoTime()
@@ -412,12 +434,7 @@ object ScaleProbe {
             .observe(cntKey(name, dir), count(lit(1)).as("rows"))
             .write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
-        } finally {
-          // same residue discipline as Bench: cached frames / checkpoint
-          // blocks from one pass must not distort the next
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        }
+        } finally GraftSession.releaseStorage(spark) // one pass's pins must not distort the next
       }
       try { once(); math.min(once(), once()) } // warm-up + min-of-2
       catch { case e: Throwable => System.err.println(s"[probe] $name: ${e.getMessage}"); -1.0 }
@@ -426,83 +443,53 @@ object ScaleProbe {
       observed.get(cntKey(name, dir)).map(_.getLong(0).toDouble)
         .getOrElse(byName(name).fn(spark, dir).count().toDouble)
 
-    // CC-family queries: record iterations-to-convergence at probe scale
-    // (r10 verdict #4) — a probe graph quietly approaching maxIter (20)
-    // should be visible in the artifact before it becomes a loud
-    // convergence failure on bigger data.
-    val ccQueries = Set("neardup_components", "curated_corpus")
+    // Iterative queries record their rounds at probe scale (r10 verdict
+    // #4): a probe graph quietly approaching maxIter should be visible
+    // in the artifact before it becomes a loud convergence failure on
+    // bigger data.
     val ccIters = scala.collection.mutable.Map[String, Int]()
-    val rows = probeQueries.map { n =>
+    val rows = queries.filter(q => only.forall(_.contains(q))).map { n =>
       val base = time(n, srcDir)
-      val probe = time(n, outDir)
+      val probed = time(n, probeDir)
       if (n == "graph_kcore_nodes") {
         val it = graft.operators.GraphRank.lastKCoreIterations
         ccIters(n) = it
         if (it > 6)
           System.err.println(s"[probe] $n: peeling took $it rounds at probe scale — approaching maxIter=8")
       }
-      if (ccQueries(n)) {
+      if (n == "neardup_components" || n == "curated_corpus") {
         val it = graft.dedup.Dedup.lastCcIterations
         ccIters(n) = it
         if (it > 15)
           System.err.println(s"[probe] $n: CC took $it iterations at probe scale — approaching maxIter=20")
       }
-      val ratio = if (base > 0 && probe > 0) probe / base else -1.0
+      val ratio = if (base > 0 && probed > 0) probed / base else -1.0
       // peak_rss_mb is VmHWM (monotonic): the first query whose probe
       // pass jumps it is the one that crossed a memory cliff — the
       // probe run is exactly where peak memory says something sf0.1
       // cannot.
       val peakRss = ProcStatus.rssMb("VmHWM")
       val ccJson = ccIters.get(n).map(i => s""","cc_iterations":$i""").getOrElse("")
-      println(f"""{"query":"$n","sf01_sec":$base%.2f,"probe_sec":$probe%.2f,"ratio":$ratio%.1f,"peak_rss_mb":$peakRss$ccJson}""")
-      (n, base, probe, ratio)
+      println(f"""{"query":"$n","sf01_sec":$base%.2f,"$secKey":$probed%.2f,"ratio":$ratio%.1f,"peak_rss_mb":$peakRss$ccJson}""")
+      (n, ratio)
     }
-    // A time ratio must be judged against the operator's WORK growth
-    // before calling it superlinear. Two denominators:
-    //  - output rows: an operator whose true answer grows
-    //    quadratically on the probe corpus legitimately spends time
-    //    proportional to the rows it must emit;
-    //  - a per-query work measure, where registered: the exact
-    //    similarity join's verification cost is linear in its
-    //    CANDIDATE set, and on this probe corpus (every document has
-    //    10 rotated near-identical copies — token sets nearly
-    //    preserved) the candidate clique mass genuinely grows
-    //    ~copies²·near-dup-density while the ≥t output does not. That
-    //    is the inherent cost of EXACTNESS on a near-dup-dense corpus;
-    //    the engine's probabilistic paths (MinHash banding with hot
-    //    caps) are the 100 TB route there, and stay linear above.
-    // Flag only when time outgrows data (10×), output, AND work.
-    val workMeasure: Map[String, String => Double] = Map(
-      "setsim_jaccard_join" -> { dir: String =>
-        graft.dedup.SetSimJoin.candidateCount(
-          spark.read.parquet(s"$dir/documents.parquet")
-            .where(org.apache.spark.sql.functions.col("doc_id") % graft.dedup.SetSimJoin.GateDocFilter === 0))
-          .collect()(0).getLong(0).toDouble
-      })
-    // Base threshold scales with the probe factor: 2.5× the data ratio
-    // (25 at the historical 10×), so a 30× run doesn't flag every
-    // query for honestly paying 30× the work.
-    val flagBase = 2.5 * copies
-    val flagged = rows.filter(r => r._4 > flagBase).filter { case (n, _, _, tRatio) =>
+    val flagBase = 2.5 * dataRatio
+    val flagged = rows.filter(_._2 > flagBase).filter { case (n, tRatio) =>
       val cntBase = observedCount(n, srcDir)
-      val cntProbe = observedCount(n, outDir)
+      val cntProbe = observedCount(n, probeDir)
       val rowsRatio = if (cntBase > 0) cntProbe / cntBase else 1.0
       val workRatio = workMeasure.get(n).map { m =>
-        val wb = m(srcDir); val wp = m(outDir)
+        val wb = m(srcDir); val wp = m(probeDir)
         val r = if (wb > 0) wp / wb else 1.0
         println(f"""{"query":"$n","work_sf01":${wb.toLong},"work_probe":${wp.toLong},"work_ratio":$r%.1f}""")
         r
-      }.getOrElse(1.0)
-      println(f"""{"query":"$n","rows_sf01":${cntBase.toLong},"rows_probe":${cntProbe.toLong},"rows_ratio":$rowsRatio%.1f,"time_ratio":$tRatio%.1f}""")
-      tRatio > math.max(flagBase, 2.5 * math.max(rowsRatio, workRatio))
+      }
+      println(f"""{"query":"$n","rows_sf01":${cntBase.toLong},"$rowsKey":${cntProbe.toLong},"rows_ratio":$rowsRatio%.1f,"time_ratio":$tRatio%.1f}""")
+      tRatio > math.max(flagBase, 2.5 * workRatio.fold(rowsRatio)(math.max(rowsRatio, _)))
     }.map("\"" + _._1 + "\"").mkString("[", ",", "]")
-    // flag_rule states the criterion IN the artifact: an empty flag
-    // list means "no query's time ratio exceeded max(2.5*copies, 2.5x
-    // its rows/work growth)" — not "all ratios ~1x".
     val ccJson = ccIters.toSeq.sortBy(_._1)
       .map { case (n, i) => "\"" + n + "\":" + i }.mkString("{", ",", "}")
-    println(s"""{"metric":"scale_probe","copies":$copies,"flag_rule":"time_ratio>max(2.5*copies,2.5*max(rows_ratio,work_ratio))","flagged_superlinear":$flagged,"cc_iterations":$ccJson,"proc":{"rss_mb":${ProcStatus.rssMb("VmRSS")},"peak_rss_mb":${ProcStatus.rssMb("VmHWM")}}}""")
-    spark.stop()
+    println(s"""{$summary,"flagged_superlinear":$flagged,"cc_iterations":$ccJson,"proc":{"rss_mb":${ProcStatus.rssMb("VmRSS")},"peak_rss_mb":${ProcStatus.rssMb("VmHWM")}}}""")
   }
 }
 
@@ -591,86 +578,14 @@ object SkewProbe {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val hotCopies = sys.env.getOrElse("SPARK_GRAFT_SKEW_COPIES", "100").toInt
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SKEW_DIR", s"/tmp/graft_probe_skew$hotCopies")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     materializeSkew(spark, srcDir, outDir, hotCopies)
     val baseRows = spark.read.parquet(s"$srcDir/documents.parquet").count().toDouble
     val skewRows = spark.read.parquet(s"$outDir/documents.parquet").count().toDouble
     val dataRatio = skewRows / baseRows
     println(f"""{"metric":"skew_probe_shape","hot_copies":$hotCopies,"base_rows":${baseRows.toLong},"skew_rows":${skewRows.toLong},"data_ratio":$dataRatio%.2f}""")
-
-    val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val probeQueries = SkewQueries.filter(q => only.forall(_.contains(q)))
-    val byName = Registry.all.map(q => q.name -> q).toMap
-    val observed = Observed.install(spark)
-    def cntKey(name: String, dir: String) = s"skewcnt:$name:$dir"
-    def time(name: String, dir: String): Double = {
-      val q = byName(name)
-      q.setup.foreach { su =>
-        try su(spark, dir)
-        catch { case e: Throwable => System.err.println(s"[skewprobe] $name setup: ${e.getMessage}") }
-        finally {
-          // same residue discipline as the uniform probe's setup hook
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        }
-      }
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try {
-          q.fn(spark, dir)
-            .observe(cntKey(name, dir), count(lit(1)).as("rows"))
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } finally {
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        }
-      }
-      try { once(); math.min(once(), once()) } // warm-up + min-of-2
-      catch { case e: Throwable => System.err.println(s"[skewprobe] $name: ${e.getMessage}"); -1.0 }
-    }
-    def observedCount(name: String, dir: String): Double =
-      observed.get(cntKey(name, dir)).map(_.getLong(0).toDouble).getOrElse(-1.0)
-
-    val ccIters = scala.collection.mutable.Map[String, Int]()
-    val rows = probeQueries.map { n =>
-      val base = time(n, srcDir)
-      val probe = time(n, outDir)
-      if (Set("neardup_components", "curated_corpus")(n)) {
-        val it = graft.dedup.Dedup.lastCcIterations
-        ccIters(n) = it
-        if (it > 15)
-          System.err.println(s"[skewprobe] $n: CC took $it iterations — approaching maxIter=20")
-      }
-      val ratio = if (base > 0 && probe > 0) probe / base else -1.0
-      val peakRss = ProcStatus.rssMb("VmHWM")
-      val ccJson = ccIters.get(n).map(i => s""","cc_iterations":$i""").getOrElse("")
-      println(f"""{"query":"$n","sf01_sec":$base%.2f,"skew_sec":$probe%.2f,"ratio":$ratio%.1f,"peak_rss_mb":$peakRss$ccJson}""")
-      (n, base, probe, ratio)
-    }
-    val flagBase = 2.5 * dataRatio
-    val flagged = rows.filter(r => r._4 > flagBase).filter { case (n, _, _, tRatio) =>
-      val cntBase = observedCount(n, srcDir)
-      val cntProbe = observedCount(n, outDir)
-      val rowsRatio = if (cntBase > 0) cntProbe / cntBase else 1.0
-      println(f"""{"query":"$n","rows_sf01":${cntBase.toLong},"rows_skew":${cntProbe.toLong},"rows_ratio":$rowsRatio%.1f,"time_ratio":$tRatio%.1f}""")
-      tRatio > math.max(flagBase, 2.5 * rowsRatio)
-    }.map("\"" + _._1 + "\"").mkString("[", ",", "]")
-    val ccJson = ccIters.toSeq.sortBy(_._1)
-      .map { case (n, i) => "\"" + n + "\":" + i }.mkString("{", ",", "}")
-    println(f"""{"metric":"skew_probe","hot_copies":$hotCopies,"data_ratio":$dataRatio%.2f,"flag_rule":"time_ratio>max(2.5*data_ratio,2.5*rows_ratio)","flagged_superlinear":$flagged,"cc_iterations":$ccJson,"proc":{"rss_mb":${ProcStatus.rssMb("VmRSS")},"peak_rss_mb":${ProcStatus.rssMb("VmHWM")}}}""")
+    ScaleProbe.probe(spark, srcDir, outDir, SkewQueries, dataRatio, "skew_sec", "rows_skew",
+      f""""metric":"skew_probe","hot_copies":$hotCopies,"data_ratio":$dataRatio%.2f,"flag_rule":"time_ratio>max(2.5*data_ratio,2.5*rows_ratio)"""")
     spark.stop()
   }
 }

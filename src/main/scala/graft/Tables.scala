@@ -18,7 +18,7 @@ object Tables {
     * SchemaGuard flags where unexpected.
     *
     * Every session the engine constructs sets this at builder time
-    * (Bench/Verify/Main/Plans/ScaleProbe/KmerBench/TestSpark), so for
+    * ([[GraftSession.local]], which every main and the tests use), so for
     * engine-owned sessions it is construction state, not a read side
     * effect. This helper exists for DRIVER-owned sessions — the
     * correctness harness calls `SparkEntry.queries(...)` with its own

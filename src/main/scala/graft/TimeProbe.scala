@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Ad-hoc optimization-round profiler: for each named query, after one
   * discarded warm pass, times (a) `fn(spark, dir)` construction — which
@@ -16,38 +17,12 @@ object TimeProbe {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val byName = Registry.all.map(q => q.name -> q).toMap
+    val jobs = new RunJobTimes
+    spark.sparkContext.addSparkListener(jobs)
 
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
-    // Boxed key/value types so remove() on a missing key returns null
-    // (a primitive-typed map unboxes the miss to 0L and the null check
-    // below can never fire — a job whose start event was missed would
-    // record a garbage epoch-sized duration).
-    val jobStart = new java.util.concurrent.ConcurrentHashMap[Integer, java.lang.Long]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobStart.put(j.jobId, System.nanoTime())
-      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        val t0 = jobStart.remove(Integer.valueOf(j.jobId))
-        if (t0 != null) jobs.add(j.jobId -> (System.nanoTime() - t0.longValue()))
-      }
-    })
-
-    def cleanup(): Unit = try {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    } catch { case _: Throwable => () }
+    def cleanup(): Unit = try GraftSession.releaseStorage(spark) catch { case _: Throwable => () }
 
     names.foreach { name =>
       val q = byName(name)
@@ -56,18 +31,59 @@ object TimeProbe {
       try { q.fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
       catch { case e: Throwable => System.err.println(s"$name warm failed: $e") }
       cleanup()
-      jobs.clear()
-      jobStart.clear() // drop warm-run jobs still in flight so a late end event can't pollute the timed list
+      jobs.nextRun(spark.sparkContext)
       val t0 = System.nanoTime()
       val df = q.fn(spark, sfDir)
       val t1 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val t2 = System.nanoTime()
-      val jl = jobs.toArray(Array.empty[(Int, Long)]).sortBy(_._1)
+      val jl = jobs.current
       println(f"$name%-35s construct=${(t1 - t0) / 1e9}%6.2fs sink=${(t2 - t1) / 1e9}%6.2fs jobs=${jl.length}%3d " +
         jl.map(j => f"${j._2 / 1e9}%.2f").mkString("[", ",", "]"))
       cleanup()
     }
     spark.stop()
   }
+}
+
+/** Wall nanoseconds of each Spark job of the current run, by job id.
+  *
+  * Every run gets a generation, which travels with its jobs as a local
+  * property of the submitting thread (Spark copies local properties to
+  * the threads it starts for broadcasts and subqueries). A job ending
+  * in the current run is counted only if it STARTED in it: a warm-run
+  * job still in flight when the timed run begins is dropped, even when
+  * its start event reaches the listener after the bump.
+  */
+class RunJobTimes extends SparkListener {
+  @volatile private var generation = 0
+  // Boxed key/value types so remove() on a missing key returns null.
+  private val starts = new java.util.concurrent.ConcurrentHashMap[Integer, (Int, Long)]()
+  private val ended = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+
+  /** Starts a new run: jobs `sc` submits from this thread from now on
+    * belong to it.
+    */
+  def nextRun(sc: SparkContext): Unit = {
+    generation += 1
+    ended.clear()
+    sc.setLocalProperty(RunJobTimes.GenerationKey, generation.toString)
+  }
+
+  /** (job id, wall ns) of the current run's finished jobs, by job id. */
+  def current: Array[(Int, Long)] = ended.toArray(Array.empty[(Int, Long)]).sortBy(_._1)
+
+  override def onJobStart(j: SparkListenerJobStart): Unit = {
+    val gen = Option(j.properties).flatMap(p => Option(p.getProperty(RunJobTimes.GenerationKey)))
+    starts.put(j.jobId, (gen.fold(-1)(_.toInt), System.nanoTime()))
+  }
+
+  override def onJobEnd(j: SparkListenerJobEnd): Unit = {
+    val s = starts.remove(Integer.valueOf(j.jobId))
+    if (s != null && s._1 == generation) ended.add(j.jobId -> (System.nanoTime() - s._2))
+  }
+}
+
+object RunJobTimes {
+  val GenerationKey = "graft.timeprobe.generation"
 }

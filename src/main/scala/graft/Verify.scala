@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,16 +9,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val nameFilter: String => Boolean =
       if (args.length > 2) args(2).split(",").toSet else (_: String) => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Harness-schema tripwire (SchemaGuard doc): a silent test-data
     // regeneration with a changed physical type must fail LOUD here, not
     // as quietly-omitted gate rows. Print every drift line but keep
@@ -44,10 +34,7 @@ object Verify {
         // (winnow seed join, phash signatures, …) leave it persisted by
         // convention — across a 322-query run those by-convention pins
         // would otherwise accumulate in the block manager.
-        try {
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        } catch { case _: Throwable => () }
+        try GraftSession.releaseStorage(spark) catch { case _: Throwable => () }
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, SpecificInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.ReadOnlyArrayData
 
@@ -67,44 +67,31 @@ final class KmerWindowsArrayData(s: UTF8String, k: Int) extends ReadOnlyArrayDat
   * materializes neither the O(len) position array of the
   * `explode(sequence(...))` formulation nor an O(len) window array.
   * The interpreted `eval` (non-WSCG contexts) walks the same lazy
-  * collection. Measured in [[KmerBench]] at k ∈ {3, 8, 21}.
-  *
-  * With `withPos = true` (`kmer_windows_pos`) the generator also emits
-  * the 0-based window ordinal — the `posexplode` analog, used by
-  * [[graft.dedup.SubstringDup]] which needs character offsets; the
-  * position comes from the Generate loop's own index, so the lazy
-  * no-materialization property is unchanged.
+  * collection.
   *
   * Counting does not go through this generator: [[Kmers.kmerCounts]]
   * aggregates [[KmerCodeGenerator]]'s packed codes. This one yields the
   * window relation itself ([[Kmers.kmersGen]]), the distinct-count
   * queries and the dedup shingles.
   */
-case class KmerGenerator(child: Expression, k: Int, withPos: Boolean = false)
+case class KmerGenerator(child: Expression, k: Int)
     extends UnaryExpression with CollectionGenerator {
 
-  override def position: Boolean = withPos
+  override def position: Boolean = false
   override def inline: Boolean = false
   override def collectionType: DataType = ArrayType(StringType, containsNull = false)
 
-  override def elementSchema: StructType =
-    if (withPos)
-      new StructType()
-        .add("pos", IntegerType, nullable = false)
-        .add("word", StringType, nullable = false)
-    else new StructType().add("word", StringType, nullable = false)
+  override def elementSchema: StructType = new StructType().add("word", StringType, nullable = false)
 
   override def checkInputDataTypes(): TypeCheckResult =
-    KmerCodes.checkWindowInput(if (withPos) "kmer_windows_pos" else "kmer_windows", child, k)
+    KmerCodes.checkWindowInput("kmer_windows", child, k)
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
     if (v == null) Iterator.empty
     else {
       val arr = new KmerWindowsArrayData(v.asInstanceOf[UTF8String], k)
-      Iterator.tabulate(arr.numElements()) { i =>
-        if (withPos) InternalRow(i, arr.getUTF8String(i)) else InternalRow(arr.getUTF8String(i))
-      }
+      Iterator.tabulate(arr.numElements())(i => InternalRow(arr.getUTF8String(i)))
     }
   }
 

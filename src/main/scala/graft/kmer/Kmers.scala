@@ -40,27 +40,11 @@ object Kmers {
   val MaxK = 64
 
   /** All sliding windows of width k over `textCol`, one row per window
-    * (the Map kernel, reference `src/GPU_Module/GPU.cpp:32-45`) — the
-    * builtin-composition formulation. Rows shorter than k yield nothing
-    * (`setsize=0` guard, reference `src/main.cpp:133`). Kept as the
-    * extension-free baseline and [[KmerBench]] comparator; the default
-    * pipeline path is [[kmersGen]], which beats it by skipping the
-    * per-row O(len) position-array materialization.
-    */
-  def kmers(df: DataFrame, textCol: String, k: Int): DataFrame = {
-    require(k >= 1 && k <= MaxK, s"k must be in [1, $MaxK], got $k")
-    val c = col(textCol)
-    // Guard length >= k before sequence(): Spark's sequence(1, 0) counts
-    // *down* ([1, 0]), it is not empty.
-    graft.Partitioning.fanOut(df.where(length(c) >= k))
-      .select(explode(sequence(lit(1), length(c) - (k - 1))).as("p"), c.as("__text"))
-      .select(col("__text").substr(col("p"), lit(k)).as("word"))
-  }
-
-  /** Window explode via the custom [[KmerGenerator]] — runs inside
-    * WholeStageCodegen over a lazy collection (no per-row position or
-    * window array). The DEFAULT path: measured ≥ the explode
-    * formulation at k ∈ {3, 8, 21} ([[KmerBench]]).
+    * (the Map kernel, reference `src/GPU_Module/GPU.cpp:32-45`), via the
+    * custom [[KmerGenerator]] — runs inside WholeStageCodegen over a
+    * lazy collection (no per-row position or window array). Rows
+    * shorter than k yield nothing (`setsize=0` guard, reference
+    * `src/main.cpp:133`).
     */
   def kmersGen(df: DataFrame, textCol: String, k: Int): DataFrame =
     generate(df, textCol, k, s"kmer_windows($textCol, $k) AS word")

@@ -30,10 +30,7 @@ class StorageResidueSpec extends AnyFunSuite with Matchers {
     cachedRdds()
   }
 
-  private def benchStyleCleanup(): Unit = {
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-  }
+  private def benchStyleCleanup(): Unit = GraftSession.releaseStorage(spark)
 
   test("connectedComponents: a 12-iteration chain leaves at most the result's own blocks") {
     benchStyleCleanup()

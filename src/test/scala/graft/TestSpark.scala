@@ -6,13 +6,5 @@ import org.apache.spark.sql.SparkSession
   * sequentially — `Test / parallelExecution := false`).
   */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-tests")
-    .withExtensions(new GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(2)
 }

@@ -80,7 +80,8 @@ object KmerProps extends Properties("Kmers") {
     marks.take(3).foreach { case (where, c) =>
       val at = where match {
         case "start" => rnd.nextInt(3)
-        case "middle" => len / 2 - 2 + rnd.nextInt(5)
+        // clamped: at k = 1 a row can be 4 chars long
+        case "middle" => math.min(len - 1, len / 2 - 2 + rnd.nextInt(5))
         case _ => len - 1 - rnd.nextInt(3)
       }
       cs(at) = c

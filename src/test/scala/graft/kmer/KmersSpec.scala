@@ -42,10 +42,12 @@ class KmersSpec extends AnyFunSuite with Matchers {
   }
 
   test("k bounds are enforced (reference MAXK=64)") {
-    an[IllegalArgumentException] should be thrownBy
-      Kmers.kmers(Seq("A").toDF("text"), "text", 0)
-    an[IllegalArgumentException] should be thrownBy
-      Kmers.kmers(Seq("A").toDF("text"), "text", 65)
+    for (k <- Seq(0, 65)) {
+      an[IllegalArgumentException] should be thrownBy
+        Kmers.kmersGen(Seq("A").toDF("text"), "text", k)
+      an[IllegalArgumentException] should be thrownBy
+        Kmers.kmerCounts(Seq("A").toDF("text"), "text", k)
+    }
   }
 
   test("windows never cross rows (file barrier)") {
@@ -145,7 +147,7 @@ class KmersSpec extends AnyFunSuite with Matchers {
 
   // Argument checks: a bad call fails analysis with an error naming the
   // function, for every k-mer builder.
-  private val kmerFns = Seq("kmer_windows", "kmer_windows_pos", "kmer_codes", "kmer_decode")
+  private val kmerFns = Seq("kmer_windows", "kmer_codes", "kmer_decode")
   private def argCol(fn: String): String = if (fn == "kmer_decode") "code" else "text"
 
   private def analysisError(sql: String): AnalysisException = {

@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
 # Run the N-fold scale probe and write BENCH_probe<N>x_<tag>.json — but
 # only if the probe actually produced output (an empty committed
-# artifact reads as coverage that isn't — the r7 lesson; see
-# probe10x.sh, which this generalizes).
+# artifact reads as coverage that isn't — the r7 lesson). The probe
+# streams to a temp file and the artifact only materializes when
+# `test -s` passes.
 #
 # usage: probe.sh <tag, e.g. r11> [copies=10]
 #   SPARK_GRAFT_CPUS=4 probe.sh r11 10   # constrained-core variant:

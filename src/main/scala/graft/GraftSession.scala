@@ -3,15 +3,22 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one way the engine's mains (and the test suite) build a session,
-  * and the storage cleanup they run between queries.
+  * the one way [[SparkEntry]] prepares a session it did not build, and
+  * the storage cleanup the mains run between queries.
   */
 object GraftSession {
 
+  /** A TIMESTAMP(NANOS) column (one of the harness's physical encodings
+    * of `events.ts`) is unreadable by the vectorized parquet reader
+    * unless this is true; with it, such columns surface as raw nanos
+    * longs, which [[Tables.normalizeTs]] rebuilds.
+    */
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
   /** A local session on `cpus` cores: the engine's functions and
     * optimizer rules ([[GraftExtensions]]), one shuffle partition per
-    * core, a UTC session zone, and `nanosAsLong` so every harness
-    * generation of `events.ts` is readable (see
-    * [[Tables.ensureLegacyParquetConf]]). AQE is Spark's default. Log
+    * core, a UTC session zone, and [[NanosAsLong]] so every harness
+    * generation of `events.ts` is readable. AQE is Spark's default. Log
     * level WARN: the harness parses the mains' stdout and reads their
     * stderr for failures.
     */
@@ -21,11 +28,21 @@ object GraftSession {
       .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(NanosAsLong, "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Prepares a session the engine did not build (a caller's, passed
+    * to [[SparkEntry]]) as [[local]] would have: sets [[NanosAsLong]]
+    * and registers each engine function its registry lacks. A session
+    * that already has the functions keeps them as they are.
+    */
+  def adopt(spark: SparkSession): Unit = {
+    spark.conf.set(NanosAsLong, "true")
+    GraftFunctions.addMissing(spark)
   }
 
   /** Drops every cached frame and every persisted RDD (checkpoint blocks

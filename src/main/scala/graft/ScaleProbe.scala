@@ -322,7 +322,6 @@ object ScaleProbe {
     // harness data vintage (Tables.normalizeEventsTs doc). Normalize to
     // TimestampType first, then shift each copy by i days; the probe copy
     // lands as a plain timestamp, which Tables.events passes through.
-    Tables.ensureLegacyParquetConf(spark)
     val events = Tables.normalizeEventsTs(spark.read.parquet(s"$srcDir/events.parquet"))
     union10(events) { (e, i) =>
       e.select(
@@ -366,27 +365,11 @@ object ScaleProbe {
       if (copies == 10) "/tmp/graft_probe_sf1" else s"/tmp/graft_probe_x$copies")
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     materialize(spark, srcDir, outDir, copies)
-    // The exact similarity join's verification cost is linear in its
-    // CANDIDATE set, and on this probe corpus (every document has
-    // `copies` rotated near-identical copies — token sets nearly
-    // preserved) the candidate clique mass genuinely grows
-    // ~copies²·near-dup-density while the ≥t output does not. That is
-    // the inherent cost of EXACTNESS on a near-dup-dense corpus; the
-    // engine's probabilistic paths (MinHash banding with hot caps) are
-    // the 100 TB route there, and stay linear above.
-    val workMeasure: Map[String, String => Double] = Map(
-      "setsim_jaccard_join" -> { dir: String =>
-        graft.dedup.SetSimJoin.candidateCount(
-          spark.read.parquet(s"$dir/documents.parquet")
-            .where(col("doc_id") % graft.dedup.SetSimJoin.GateDocFilter === 0))
-          .collect()(0).getLong(0).toDouble
-      })
     // flag_rule states the criterion IN the artifact: an empty flag
     // list means "no query's time ratio exceeded max(2.5*copies, 2.5x
-    // its rows/work growth)" — not "all ratios ~1x".
+    // its rows growth)" — not "all ratios ~1x".
     probe(spark, srcDir, outDir, ProbeQueries, copies.toDouble, "probe_sec", "rows_probe",
-      s""""metric":"scale_probe","copies":$copies,"flag_rule":"time_ratio>max(2.5*copies,2.5*max(rows_ratio,work_ratio))"""",
-      workMeasure)
+      s""""metric":"scale_probe","copies":$copies,"flag_rule":"time_ratio>max(2.5*copies,2.5*rows_ratio)"""")
     spark.stop()
   }
 
@@ -403,14 +386,12 @@ object ScaleProbe {
     * A time ratio must be judged against the operator's WORK growth
     * before calling it superlinear: an operator whose true answer grows
     * faster than `dataRatio` legitimately spends time proportional to
-    * the rows it must emit (`rowsKey` names its probe-side row count),
-    * and `workMeasure` gives a per-query work count where output rows
-    * understate the work. A query is flagged only when its time ratio
-    * outgrows 2.5× the data ratio, its output AND its work.
+    * the rows it must emit (`rowsKey` names its probe-side row count).
+    * A query is flagged only when its time ratio outgrows 2.5× both the
+    * data ratio and its output ratio.
     */
   def probe(spark: SparkSession, srcDir: String, probeDir: String, queries: Seq[String],
-            dataRatio: Double, secKey: String, rowsKey: String, summary: String,
-            workMeasure: Map[String, String => Double] = Map.empty): Unit = {
+            dataRatio: Double, secKey: String, rowsKey: String, summary: String): Unit = {
     val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val byName = Registry.all.map(q => q.name -> q).toMap
@@ -478,14 +459,8 @@ object ScaleProbe {
       val cntBase = observedCount(n, srcDir)
       val cntProbe = observedCount(n, probeDir)
       val rowsRatio = if (cntBase > 0) cntProbe / cntBase else 1.0
-      val workRatio = workMeasure.get(n).map { m =>
-        val wb = m(srcDir); val wp = m(probeDir)
-        val r = if (wb > 0) wp / wb else 1.0
-        println(f"""{"query":"$n","work_sf01":${wb.toLong},"work_probe":${wp.toLong},"work_ratio":$r%.1f}""")
-        r
-      }
       println(f"""{"query":"$n","rows_sf01":${cntBase.toLong},"$rowsKey":${cntProbe.toLong},"rows_ratio":$rowsRatio%.1f,"time_ratio":$tRatio%.1f}""")
-      tRatio > math.max(flagBase, 2.5 * workRatio.fold(rowsRatio)(math.max(rowsRatio, _)))
+      tRatio > math.max(flagBase, 2.5 * rowsRatio)
     }.map("\"" + _._1 + "\"").mkString("[", ",", "]")
     val ccJson = ccIters.toSeq.sortBy(_._1)
       .map { case (n, i) => "\"" + n + "\":" + i }.mkString("{", ",", "}")

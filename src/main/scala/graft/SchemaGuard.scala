@@ -93,7 +93,6 @@ object SchemaGuard {
     * first-thing in every Verify invocation.
     */
   def check(spark: SparkSession, sfDir: String): Seq[String] = {
-    Tables.ensureLegacyParquetConf(spark)
     expected.keys.toSeq.sorted.flatMap { t =>
       try diff(t, spark.read.parquet(s"$sfDir/$t.parquet").schema)
       catch {

@@ -16,19 +16,24 @@ object SparkEntry {
     * deduped k-mer counts (reference `src/main.cpp:55-73`) over the
     * documents corpus.
     */
-  def entry(spark: SparkSession): DataFrame =
+  def entry(spark: SparkSession): DataFrame = {
+    GraftSession.adopt(spark)
     kmer.Kmers
       .thresholded(Tables.documents(spark, "/root/testdata/sf0.001"), "text", 8)
       .orderBy("word")
+  }
 
-  /** One entry per implemented operator from SURVEY.md §2. Queries with
-    * an untimed setup half (the `*_from_saved` train+persist) compose
-    * it here, so this view is always self-contained: the correctness
-    * gate exercises the FULL train→save→load→apply loop while the
-    * bench times only the apply half (Bench runs setup separately).
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * first adopts its session ([[GraftSession.adopt]]), which may be the
+    * caller's own. Queries with an untimed setup half (the
+    * `*_from_saved` train+persist) compose it here, so this view is
+    * always self-contained: the correctness gate exercises the FULL
+    * train→save→load→apply loop while the bench times only the apply
+    * half (Bench runs setup separately).
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Registry.all.map(q => q.name -> { (s: SparkSession, dir: String) =>
+      GraftSession.adopt(s)
       q.setup.foreach(_(s, dir))
       q.fn(s, dir)
     }).toMap

@@ -10,33 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
 
-  /** The engine's one deliberate session-conf global. A TIMESTAMP(NANOS)
-    * column (one of the harness's historical physical encodings) is
-    * unreadable by the vectorized parquet reader without
-    * `spark.sql.legacy.parquet.nanosAsLong=true`; with it, such columns
-    * surface as raw nanos longs, which [[normalizeTs]] rebuilds and
-    * SchemaGuard flags where unexpected.
-    *
-    * Every session the engine constructs sets this at builder time
-    * ([[GraftSession.local]], which every main and the tests use), so for
-    * engine-owned sessions it is construction state, not a read side
-    * effect. This helper exists for DRIVER-owned sessions — the
-    * correctness harness calls `SparkEntry.queries(...)` with its own
-    * session — and is invoked before every raw parquet read so no read
-    * is order-dependent on another reader having run first. It is
-    * idempotent and the engine never flips it back, so "set at every
-    * read entry point" and "set once at construction" are equivalent;
-    * a future consumer genuinely wanting native nanos semantics must
-    * use its own separately-configured session rather than relying on
-    * call order.
-    */
-  def ensureLegacyParquetConf(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    ensureLegacyParquetConf(spark)
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
-  }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame =
     normalizeTs(table(spark, sfDir, "lineitem"), "l_shipdate")

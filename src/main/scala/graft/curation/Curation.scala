@@ -840,7 +840,6 @@ object Curation {
   def decontaminateBloom(
       docs: DataFrame, holdout: DataFrame, n: Int,
       expectedItems: Long = 4L << 20, numBits: Long = 32L << 20): DataFrame = {
-    graft.GraftFunctions.register(docs.sparkSession)
     // Gram hashes end-to-end, like [[decontaminate]]: the bloom sketch
     // is built over the 64-bit gram hash directly (no per-gram string
     // exists to xxhash64), and the exact FP-removal join exchanges

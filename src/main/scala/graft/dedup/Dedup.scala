@@ -60,7 +60,6 @@ object Dedup {
     * partition to ≤NumPerms values per doc first.)
     */
   def docShingles(docs: DataFrame, k: Int): DataFrame = {
-    graft.GraftFunctions.register(docs.sparkSession)
     // kmer_windows Generator: windows stream lazily inside
     // WholeStageCodegen — no per-row position array (see KmerGenerator)
     graft.Partitioning.fanOut(docs.where(length(col("text")) >= k))
@@ -933,7 +932,6 @@ object Dedup {
     * products, engine-portable.
     */
   def quantized(embeddings: DataFrame): DataFrame = {
-    graft.GraftFunctions.register(embeddings.sparkSession)
     embeddings.select(
       col("vec_id"),
       expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))").as("q"))
@@ -1029,7 +1027,6 @@ object Dedup {
     */
   def semanticDecontaminate(
       embeddings: DataFrame, bits: Int = 6, simThreshold: Double = 0.25): DataFrame = {
-    graft.GraftFunctions.register(embeddings.sparkSession)
     val q = embeddings.select(
         col("vec_id"), col("label"),
         expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))").as("q"))

@@ -69,18 +69,8 @@ object SetSimJoin {
         array_distinct(split(trim(lower(col("text"))), "\\s+")),
         x => x =!= "").as("ts"))
 
-  /** Distinct candidate pairs the prefix+positional filters admit —
-    * the exact join's true work measure (verification cost is linear
-    * in THIS, not in the output: on a corpus of dense near-dup
-    * cliques candidates ≈ clique mass even when the threshold rejects
-    * most of them). Surfaced for the 10× scale probe's work-aware
-    * superlinearity accounting. */
-  def candidateCount(docs: DataFrame, t: Double = DefaultThreshold): DataFrame =
-    candidates(docs, t).agg(count(lit(1)).as("n_candidates"))
-
-  /** Candidate generation shared by [[jaccardJoin]] and
-    * [[candidateCount]]: distinct (doc_a < doc_b) pairs surviving the
-    * prefix, length, and positional filters. */
+  /** Candidate generation of [[jaccardJoin]]: distinct (doc_a < doc_b)
+    * pairs surviving the prefix, length, and positional filters. */
   private def candidates(docs: DataFrame, t: Double): DataFrame = {
     require(t > 0.0 && t <= 1.0, s"threshold must be in (0, 1], got $t")
     val toks = tokens(docs)

@@ -54,7 +54,6 @@ object SubstringDup {
     require(k >= 1 && k <= graft.text.RollingHash.MaxK,
       s"k must be in [1, ${graft.text.RollingHash.MaxK}], got $k")
     require(sampleBits >= 0 && sampleBits <= 4, s"sampleBits must be 0..4, got $sampleBits")
-    graft.GraftFunctions.register(docs.sparkSession)
     // the rolling-hash generator emits (1-based pos, 62-bit hash) per
     // window in one O(len) map-stage pass; the keep test reads the low
     // bits (the combined hash ≡ lane-2 mod 2^sampleBits, uniform over

@@ -45,7 +45,6 @@ object Winnow {
     * the map stage by the generator.
     */
   def fingerprints(docs: DataFrame): DataFrame = {
-    graft.GraftFunctions.register(docs.sparkSession)
     graft.Partitioning.fanOut(docs)
       .selectExpr("doc_id", s"winnow_fingerprints(text, $K, $W) AS (pos, h)")
   }

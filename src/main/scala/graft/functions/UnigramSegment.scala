@@ -64,9 +64,27 @@ case class UnigramSegment(left: Expression, right: Expression, maxPiece: Int)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "unigram_segment"
 
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val w = l.asInstanceOf[UTF8String]
-    val m = r.asInstanceOf[MapData]
+  override protected def nullSafeEval(l: Any, r: Any): Any =
+    UnigramSegment.run(l.asInstanceOf[UTF8String], r.asInstanceOf[MapData], maxPiece)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (w, m) => {
+      s"""
+         |${ev.value} = graft.functions.UnigramSegment.run($w, $m, $maxPiece);
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): UnigramSegment =
+    copy(left = newLeft, right = newRight)
+}
+
+object UnigramSegment {
+
+  /** The Viterbi DP and backwalk of `unigram_segment(w, m, maxPiece)`,
+    * shared by its interpreted and generated paths.
+    */
+  def run(w: UTF8String, m: MapData, maxPiece: Int): ArrayData = {
     val L = w.numChars()
     val cap = 8 * L + 8
     val score = new Array[Long](cap)
@@ -117,80 +135,4 @@ case class UnigramSegment(left: Expression, right: Expression, maxPiece: Int)
     }
     new GenericArrayData(java.util.Arrays.copyOf(ps, np))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (w, m) => {
-      val L = ctx.freshName("L")
-      val cap = ctx.freshName("cap")
-      val score = ctx.freshName("score")
-      val present = ctx.freshName("present")
-      val keys = ctx.freshName("keys")
-      val vals = ctx.freshName("vals")
-      val mn = ctx.freshName("mn")
-      val i = ctx.freshName("i")
-      val k = ctx.freshName("k")
-      val best = ctx.freshName("best")
-      val valid = ctx.freshName("valid")
-      val bp = ctx.freshName("bp")
-      val j = ctx.freshName("j")
-      val k1 = ctx.freshName("k1")
-      val cv = ctx.freshName("cv")
-      val cb = ctx.freshName("cb")
-      val cp = ctx.freshName("cp")
-      val p = ctx.freshName("p")
-      val kp = ctx.freshName("kp")
-      val v = ctx.freshName("v")
-      val ps = ctx.freshName("ps")
-      val np = ctx.freshName("np")
-      val jj = ctx.freshName("jj")
-      val st = ctx.freshName("st")
-      s"""
-         |int $L = $w.numChars();
-         |int $cap = 8 * $L + 8;
-         |long[] $score = new long[$cap];
-         |boolean[] $present = new boolean[$cap];
-         |org.apache.spark.sql.catalyst.util.ArrayData $keys = $m.keyArray();
-         |org.apache.spark.sql.catalyst.util.ArrayData $vals = $m.valueArray();
-         |int $mn = $m.numElements();
-         |for (int $i = 0; $i < $mn; $i++) {
-         |  int $k = $keys.getInt($i);
-         |  if ($k >= 0 && $k < $cap && !$vals.isNullAt($i)) {
-         |    $present[$k] = true; $score[$k] = $vals.getLong($i);
-         |  }
-         |}
-         |long[] $best = new long[$L + 1];
-         |boolean[] $valid = new boolean[$L + 1];
-         |int[] $bp = new int[$L + 1];
-         |$valid[0] = true;
-         |for (int $j = 1; $j <= $L; $j++) {
-         |  int $k1 = $j * 8 + 1;
-         |  boolean $cv = $present[$k1] && $valid[$j - 1];
-         |  long $cb = $cv ? $best[$j - 1] + $score[$k1] : 0L;
-         |  int $cp = 1;
-         |  for (int $p = 2; $p <= $maxPiece && $p <= $j; $p++) {
-         |    int $kp = ($j - $p + 1) * 8 + $p;
-         |    if ($cv && $present[$kp] && $valid[$j - $p]) {
-         |      long $v = $best[$j - $p] + $score[$kp];
-         |      if ($v > $cb) { $cb = $v; $cp = $p; }
-         |    }
-         |  }
-         |  $best[$j] = $cb; $valid[$j] = $cv; $bp[$j] = $cp;
-         |}
-         |org.apache.spark.unsafe.types.UTF8String[] $ps =
-         |  new org.apache.spark.unsafe.types.UTF8String[$L];
-         |int $np = 0;
-         |int $jj = $L;
-         |while ($jj > 0) {
-         |  int $st = $bp[$jj];
-         |  $ps[$np++] = $w.substringSQL($jj - $st + 1, $st);
-         |  $jj -= $st;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  java.util.Arrays.copyOf($ps, $np));
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): UnigramSegment =
-    copy(left = newLeft, right = newRight)
 }

@@ -52,7 +52,6 @@ object Kmers {
   /** The rows of `generator` over the texts with at least one window. */
   private def generate(df: DataFrame, textCol: String, k: Int, generator: String): DataFrame = {
     require(k >= 1 && k <= MaxK, s"k must be in [1, $MaxK], got $k")
-    graft.GraftFunctions.register(df.sparkSession)
     graft.Partitioning.fanOut(df.where(length(col(textCol)) >= k)).selectExpr(generator)
   }
 

@@ -83,7 +83,6 @@ object Profile {
     */
   def analyzeTable(
       spark: org.apache.spark.sql.SparkSession, sfDir: String, name: String): String = {
-    Tables.ensureLegacyParquetConf(spark)
     val cat = s"graft_stats_$name"
     spark.sql(s"DROP TABLE IF EXISTS $cat")
     spark.sql(s"CREATE TABLE $cat USING parquet LOCATION '$sfDir/$name.parquet'")

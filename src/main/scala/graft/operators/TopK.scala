@@ -26,7 +26,6 @@ object TopK {
     * one aggregation pass.
     */
   def topOrdersPerPriority(orders: DataFrame): DataFrame = {
-    graft.GraftFunctions.register(orders.sparkSession)
     orders
       .select(
         col("o_orderpriority"),

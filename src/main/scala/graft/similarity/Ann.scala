@@ -27,7 +27,6 @@ import graft.dedup.Dedup
 object Ann {
 
   private def withSim(pairs: DataFrame): DataFrame = {
-    graft.GraftFunctions.register(pairs.sparkSession)
     pairs
       .withColumn("dot", expr("dot_i64(qa, qb)"))
       .withColumn("sim",
@@ -179,7 +178,6 @@ object Ann {
     * assignment — the only exchange is the (cid, dim) aggregation.
     */
   private def lloydMatrix(base: DataFrame, cents: DataFrame): DataFrame = {
-    graft.GraftFunctions.register(base.sparkSession)
     val w = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cid"))
     val assigned = base.crossJoin(broadcast(cents))
       .withColumn("cdot", expr("dot_i64(q, cq)"))
@@ -891,7 +889,6 @@ object Ann {
     * aggregate — nothing quadratic in N anywhere.
     */
   def centroidSilhouette(embeddings: DataFrame): DataFrame = {
-    graft.GraftFunctions.register(embeddings.sparkSession)
     // label carried through the quantization projection — joining the
     // Dedup.quantized view back on vec_id would self-join the table
     val q = embeddings.select(

@@ -23,16 +23,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the two layouts per family.
   *
   * The user-supplied schema is always the RAW on-disk schema (the file
-  * source cannot infer), read from the same path the stream loads;
-  * `ensureLegacyParquetConf` runs first so TIMESTAMP(NANOS) vintages
-  * surface as longs rather than failing the vectorized reader
-  * ([[graft.Tables.ensureLegacyParquetConf]] doc).
+  * source cannot infer), read from the same path the stream loads.
+  * TIMESTAMP(NANOS) vintages surface as longs rather than fail the
+  * vectorized reader: every session the engine reads through carries
+  * the parquet conf that [[graft.GraftSession]] sets.
   */
 object StreamingSources {
 
   /** Layout-branching streaming source for `<sfDir>/<table>.parquet`. */
   def tableSource(spark: SparkSession, sfDir: String, table: String): DataFrame = {
-    graft.Tables.ensureLegacyParquetConf(spark)
     val path = new java.io.File(s"$sfDir/$table.parquet")
     val rawSchema = spark.read.parquet(path.getPath).schema
     if (path.isDirectory)

@@ -35,7 +35,6 @@ object Blocklist {
 
   /** (doc_id, pid, pos) for every occurrence. */
   def matches(docs: DataFrame): DataFrame = {
-    graft.GraftFunctions.register(docs.sparkSession)
     graft.Partitioning.fanOut(docs)
       .selectExpr("doc_id", s"ac_matches(text, '$spec') AS (pid, pos)")
   }
@@ -84,7 +83,6 @@ object Blocklist {
     * both).
     */
   def runStreamingPatternFreq(spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
-    graft.GraftFunctions.register(spark)
     val src = graft.sources.StreamingSources.docSource(spark, sfDir)
     val agg = src
       .selectExpr("doc_id", s"ac_matches(text, '$spec') AS (pid, pos)")

@@ -184,7 +184,6 @@ object Bpe {
       docs: DataFrame,
       numMerges: Int,
       maxBatch: Int = 16): (Seq[(Long, String, String, Long)], DataFrame, () => Unit) = {
-    graft.GraftFunctions.register(docs.sparkSession)
     var (vocab, freePrev) = Checkpoints.localEager(
       wordCounts(docs).select(split(col("w"), "").as("syms"), col("c")))
     val merges = ListBuffer.empty[(Long, String, String, Long)]
@@ -296,7 +295,6 @@ object Bpe {
   def tokenizeStatsFromSaved(
       spark: org.apache.spark.sql.SparkSession, sfDir: String,
       numMerges: Int = DefaultMerges): DataFrame = {
-    graft.GraftFunctions.register(spark)
     val docs = graft.Tables.documents(spark, sfDir)
     val path = graft.models.ModelStore.path("bpe_merges", sfDir)
     // self-heal for direct callers; the harness surfaces run

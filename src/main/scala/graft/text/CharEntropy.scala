@@ -36,7 +36,6 @@ object CharEntropy {
   val HighCutQ25 = 26688L // 4.17 * 256 * 25 (×25 keeps the cut integral)
 
   def charEntropy(docs: DataFrame): DataFrame = {
-    graft.GraftFunctions.register(docs.sparkSession)
     docs
       // one tight histogram loop per row (functions.CharEntropyQ): the
       // HOF formulation (transform/sequence/substring + a sorted-run

@@ -79,11 +79,6 @@ object Perceptron {
     * is classified by the learned bias sign, not pinned to a class).
     */
   private[text] def featurized(docs: DataFrame): DataFrame = {
-    // idempotent function registration for driver-owned sessions
-    // (scoreCol resolves dot_feats_w at analysis time — the engine's
-    // own sessions carry GraftExtensions, but the correctness harness
-    // calls SparkEntry.queries with its own session)
-    graft.GraftFunctions.register(docs.sparkSession)
     val base = graft.Partitioning.fanOut(docs)
       .select(
         col("doc_id"),

@@ -155,7 +155,6 @@ object QualityFilters {
     // doc — vanishing, and the DuckDB oracle (which aggregates real
     // strings) would catch it.
     require(ns == (ns.min to ns.max), s"ngram_hashes needs a contiguous n range, got $ns")
-    graft.GraftFunctions.register(docs.sparkSession)
     val perGram = graft.Partitioning.fanOut(docs)
       .select(col("doc_id"), TextAnalysis.wsTokens(lower(col("text"))).as("__toks"))
       .select(col("doc_id"), expr(s"ngram_hashes(__toks, ${ns.min}, ${ns.max})"))

@@ -308,7 +308,6 @@ object TextAnalysis {
     * across engines byte-for-byte with DuckDB's `nfc_normalize`.
     */
   def nfcNormalized(docs: DataFrame): DataFrame = {
-    graft.GraftFunctions.register(docs.sparkSession)
     // NOTE: the two literals below differ (decomposed e+U+0301 vs
     // composed U+00E9) even though most editors render both as "café".
     val suffixed = docs.withColumn("t",

@@ -188,7 +188,6 @@ object Unigram {
     * unigram_tokenize_stats headline.
     */
   private def segmented(wc: DataFrame, scores: Map[String, Long]): DataFrame = {
-    graft.GraftFunctions.register(wc.sparkSession)
     subPieces(wc)
       .join(broadcast(scoresDf(wc.sparkSession, scores)), Seq("piece"))
       .groupBy("w", "c")

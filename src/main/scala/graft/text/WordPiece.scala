@@ -134,7 +134,6 @@ object WordPiece {
 
   /** (doc_id, pid, pos) piece stream; pid = −1 is UNK. */
   def pieces(docs: DataFrame): DataFrame = {
-    graft.GraftFunctions.register(docs.sparkSession)
     graft.Partitioning.fanOut(docs)
       .select(col("doc_id"),
         explode(split(trim(col("text")), "\\s+")).as("w"))
@@ -187,7 +186,6 @@ object WordPiece {
     * discipline.
     */
   def runStreamingFertility(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.GraftFunctions.register(spark)
     val src = graft.sources.StreamingSources.docSource(spark, sfDir)
     val agg = src
       .select(col("lang"), explode(split(trim(col("text")), "\\s+")).as("w"))

@@ -1,15 +1,47 @@
 package graft
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 class GraftSessionSpec extends AnyFunSuite with Matchers {
   private val spark = GraftSession.local(2)
+  private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
   test("a local session resolves the engine's functions in plain SQL, no register call") {
-    // newSession: same extensions, but none of the temp functions that
-    // GraftFunctions.register may have added to the shared test session
+    // newSession: a function registry built from the extensions alone
     spark.newSession().sql("SELECT kmer_decode(11L, 2)").head().getString(0) shouldBe "GT"
+  }
+
+  test("SparkEntry adopts a caller's session that lacks the engine's functions and nanosAsLong") {
+    // a one-table data dir: both queries below read only documents
+    val dir = s"${OutDir.base}/graft_adopt_sf"
+    TestSpark.spark.createDataFrame(Seq((1L, "ACGTACGT GATTACA"), (2L, "a plain text row")))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val foreign = TestSpark.spark.newSession()
+    val registry = foreign.sessionState.functionRegistry
+    val ids = GraftFunctions.names.map(FunctionIdentifier(_))
+    ids.foreach(registry.dropFunction)
+    foreign.conf.set(nanosAsLong, "false")
+    ids.filter(registry.functionExists) shouldBe empty
+    // kmer_count runs kmer_codes and kmer_decode; blocklist_match_stats ac_matches
+    for (q <- Seq("kmer_count", "blocklist_match_stats"))
+      withClue(s"$q: ") {
+        SparkEntry.queries(q)(foreign, dir).collect() should not be empty
+      }
+    ids should have size 19
+    ids.filterNot(registry.functionExists) shouldBe empty
+    foreign.conf.get(nanosAsLong) shouldBe "true"
+  }
+
+  test("adopt leaves the functions of a session that already has them as they are") {
+    val s = TestSpark.spark.newSession()
+    val registry = s.sessionState.functionRegistry
+    def infos = GraftFunctions.names.map(n => registry.lookupFunction(FunctionIdentifier(n)).orNull)
+    val before = infos
+    before should not contain (null)
+    GraftSession.adopt(s)
+    infos.zip(before).foreach { case (after, was) => after should be theSameInstanceAs was }
   }
 
   test("the session time zone is UTC") {

@@ -207,7 +207,6 @@ class WinnowSpec extends AnyFunSuite with Matchers {
 
   test("common_run_len ≡ the extBlocks+extRefine fold pair, both directions (r20)") {
     import org.apache.spark.sql.functions.{call_function, col, expr, lit}
-    graft.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(53)
     // Pairs sharing an aligned seed with random-length exact runs on
     // both sides (multi-byte chars included — the byte walk must step

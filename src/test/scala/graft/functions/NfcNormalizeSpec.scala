@@ -14,7 +14,6 @@ class NfcNormalizeSpec extends AnyFunSuite with Matchers {
   private val composed = "café"    // precomposed é
 
   test("composed and decomposed forms normalize to identical bytes") {
-    graft.GraftFunctions.register(spark)
     val out = Seq((1L, decomposed), (2L, composed)).toDF("id", "t")
       .select(col("id"), expr("nfc_normalize(t)").as("n"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -25,7 +24,6 @@ class NfcNormalizeSpec extends AnyFunSuite with Matchers {
   test("already-NFC input returns the SAME UTF8String (zero copy), null passes through") {
     val s = UTF8String.fromString(composed)
     NfcNormalize.normalize(s) should be theSameInstanceAs s
-    graft.GraftFunctions.register(spark)
     Seq((1L, Option.empty[String])).toDF("id", "t")
       .selectExpr("nfc_normalize(t)").collect()(0).isNullAt(0) shouldBe true
   }

@@ -46,7 +46,6 @@ class TopKAggSpec extends AnyFunSuite with Matchers {
   }
 
   test("aggregate over many partitions matches the window rank; plan has no Window") {
-    graft.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(5)
     val data = (1 to 5000).map(i => (s"g${i % 7}", rnd.nextInt(50).toLong, i.toLong))
     val df = data.toDF("g", "s", "id").repartition(13)
@@ -68,7 +67,6 @@ class TopKAggSpec extends AnyFunSuite with Matchers {
   }
 
   test("k=1 degenerates to argmax; null scores are skipped") {
-    graft.GraftFunctions.register(spark)
     val df = Seq(
       ("a", Some(5L), 1L), ("a", None, 2L), ("a", Some(5L), 0L), ("b", Some(1L), 9L))
       .toDF("g", "s", "id")

@@ -3,6 +3,7 @@ package graft.kmer
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 import graft.TestSpark
+import graft.TestSpark.withConf
 
 /** ScalaCheck twin of the reference's golden-output verifier
   * (`/root/reference/scripts/verifier.py`): the engine must agree with a
@@ -110,16 +111,6 @@ object KmerProps extends Properties("Kmers") {
       val total = texts.map(t => math.max(0, t.codePointCount(0, t.length) - k + 1).toLong).sum
       engine == naiveCounts(texts, k) && engine.values.sum == total
     }
-
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val before = kv.map { case (key, _) => key -> spark.conf.getOption(key) }
-    kv.foreach { case (key, v) => spark.conf.set(key, v) }
-    try body
-    finally before.foreach {
-      case (key, Some(v)) => spark.conf.set(key, v)
-      case (key, None) => spark.conf.unset(key)
-    }
-  }
 
   property("kmer_codes and kmer_decode agree on the interpreted and codegen paths") =
     forAll(genMixedCase) { case (texts, k) =>

@@ -188,6 +188,17 @@ class KmersSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("the builders without literal arguments check their arity by name") {
+    val arities = Seq("dot_i64" -> 2, "dot_feats_w" -> 2, "lcs_len" -> 2, "bpe_merge_all" -> 3,
+      "topk_pairs" -> 3, "ac_matches" -> 2, "wordpiece_pieces" -> 2, "nfc_normalize" -> 1,
+      "char_entropy_q" -> 1, "bloom_filter_agg" -> 3, "might_contain" -> 2)
+    for ((fn, n) <- arities; m <- Seq(n - 1, n + 1)) {
+      val e = analysisError(s"SELECT $fn(${Seq.fill(m)("text").mkString(", ")}) FROM kmer_args")
+      e.errorClass shouldBe Some("WRONG_NUM_ARGS.WITHOUT_SUGGESTION")
+      e.getMessage should include(s"`$fn`")
+    }
+  }
+
   test("KmerGenerator handles multibyte text (char windows, not byte windows)") {
     val viaGen = Kmers.kmersGen(Seq("héllò", "日本語です").toDF("text"), "text", 2)
       .groupBy("word").count()

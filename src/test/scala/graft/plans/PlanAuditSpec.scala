@@ -44,10 +44,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers {
     // Gate on the vintages where the pin HOLDS, not on != LongType,
     // so an allowed DATE regeneration doesn't fail the build.
     import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
-    val rawOrderdate = {
-      Tables.ensureLegacyParquetConf(spark)
-      spark.read.parquet(s"$sfDir/orders.parquet").schema("o_orderdate").dataType
-    }
+    val rawOrderdate = spark.read.parquet(s"$sfDir/orders.parquet").schema("o_orderdate").dataType
     if (rawOrderdate == TimestampType || rawOrderdate == TimestampNTZType)
       p should include regex "PushedFilters: \\[.*GreaterThanOrEqual\\(o_orderdate"
   }

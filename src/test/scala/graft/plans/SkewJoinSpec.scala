@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.TestSpark
+import graft.TestSpark.withConf
 import graft.operators.Relational
 
 /** AQE skew-join teeth for skew_join_hot_key: with thresholds scaled to
@@ -37,22 +38,12 @@ class SkewJoinSpec extends AnyFunSuite with Matchers {
     "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
   )
 
-  private def withConfs[A](confs: Seq[(String, String)])(body: => A): A = {
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("AQE splits the hot partition and the result is split-invariant") {
-    val baseline = withConfs(tuned :+ ("spark.sql.adaptive.skewJoin.enabled" -> "false")) {
+    val baseline = withConf(tuned :+ ("spark.sql.adaptive.skewJoin.enabled" -> "false"): _*) {
       Relational.skewedJoinStats(li, ord, hotModulus = 2)
         .orderBy("o_orderpriority").collect().toSeq
     }
-    val (skewRows, plan) = withConfs(tuned :+ ("spark.sql.adaptive.skewJoin.enabled" -> "true")) {
+    val (skewRows, plan) = withConf(tuned :+ ("spark.sql.adaptive.skewJoin.enabled" -> "true"): _*) {
       val df = Relational.skewedJoinStats(li, ord, hotModulus = 2)
         .orderBy("o_orderpriority")
       val rows = df.collect().toSeq

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.{Tables, TestSpark}
+import graft.TestSpark.withConf
 import graft.operators.Profile
 
 /** Stats-informed planning evidence (r10 verdict #7). The engine's gate
@@ -25,16 +26,6 @@ import graft.operators.Profile
 class StatsPlanningSpec extends AnyFunSuite with Matchers {
   private val spark = TestSpark.spark
   private val sfDir = "/root/testdata/sf0.001"
-
-  private def withConfs[T](kvs: (String, String)*)(body: => T): T = {
-    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   test("column stats + CBO flip the filtered join side from shuffle to broadcast") {
     val cat = Profile.analyzeTable(spark, sfDir, "orders")
@@ -68,7 +59,7 @@ class StatsPlanningSpec extends AnyFunSuite with Matchers {
         .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"),
           sum("l_quantity").as("qty"), count(lit(1)).as("n"))
       def est(df: => org.apache.spark.sql.DataFrame, cbo: Boolean): BigInt =
-        withConfs("spark.sql.cbo.enabled" -> cbo.toString) {
+        withConf("spark.sql.cbo.enabled" -> cbo.toString) {
           df.queryExecution.optimizedPlan.stats.sizeInBytes
         }
       val estNoStats = est(filtered, cbo = false)
@@ -81,7 +72,7 @@ class StatsPlanningSpec extends AnyFunSuite with Matchers {
       estWithStats should be < upper
       val threshold = ((estWithStats + upper) / 2).toString
       def plan(cbo: Boolean): String =
-        withConfs(
+        withConf(
           "spark.sql.cbo.enabled" -> cbo.toString,
           "spark.sql.autoBroadcastJoinThreshold" -> threshold,
           // static plans: this pin is about the compile-time decision

@@ -20,7 +20,6 @@ class StreamingSourcesSpec extends AnyFunSuite with Matchers {
   private lazy val dirLayout: String = {
     val base = new java.io.File(s"${graft.OutDir.base}/graft_dirlayout_sf")
     org.apache.commons.io.FileUtils.deleteQuietly(base)
-    graft.Tables.ensureLegacyParquetConf(spark)
     for (t <- Seq("documents", "events", "embeddings"))
       spark.read.parquet(s"$sfDir/$t.parquet")
         .repartition(3) // force multiple part files

@@ -47,7 +47,6 @@ class AhoCorasickSpec extends AnyFunSuite with Matchers {
   }
 
   test("generator runs inside WholeStageCodegen and survives empty/null text") {
-    graft.GraftFunctions.register(spark)
     val df = Seq((1L, "abab"), (2L, ""), (3L, null.asInstanceOf[String]))
       .toDF("doc_id", "text")
       .selectExpr("doc_id", "ac_matches(text, 'ab|aba') AS (pid, pos)")

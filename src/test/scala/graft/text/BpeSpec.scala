@@ -171,7 +171,6 @@ class BpeSpec extends AnyFunSuite with Matchers {
   }
 
   test("bpe_merge_all ≡ chained applyMerge folds on randomized symbol arrays (r20)") {
-    graft.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(67)
     val alphabet = Seq("a", "b", "c", "é")
     // random words + random merge tables, including chain-sensitive

@@ -51,7 +51,6 @@ class NgramHashGeneratorSpec extends AnyFunSuite with Matchers {
   }
 
   private def viaGenerator(ns: Seq[Int], corpus: org.apache.spark.sql.DataFrame = docs) = {
-    graft.GraftFunctions.register(spark)
     corpus
       .select(col("doc_id"), TextAnalysis.wsTokens(lower(col("text"))).as("__toks"))
       .select(col("doc_id"), expr(s"ngram_hashes(__toks, ${ns.min}, ${ns.max})"))
@@ -102,7 +101,6 @@ class NgramHashGeneratorSpec extends AnyFunSuite with Matchers {
   }
 
   test("generator stays inside WholeStageCodegen (lazy collection, no fallback)") {
-    graft.GraftFunctions.register(spark)
     val plan = docs
       .select(col("doc_id"), TextAnalysis.wsTokens(lower(col("text"))).as("__toks"))
       .select(col("doc_id"), expr("ngram_hashes(__toks, 2, 10)"))

@@ -78,7 +78,6 @@ class PerceptronSpec extends AnyFunSuite with Matchers {
 
   test("dot_feats_w ≡ the HOF margin fold; out-of-range bucket fails loud like ANSI element_at (r19)") {
     import org.apache.spark.sql.functions.{aggregate => hofAgg, call_function, col => c, element_at, lit => l, typedlit}
-    graft.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(191)
     val w = Array.fill(Perceptron.Buckets + 1)(rnd.nextLong() % 1000L)
     val rows = (1 to 200).map { i =>

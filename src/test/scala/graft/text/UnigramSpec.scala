@@ -3,6 +3,7 @@ package graft.text
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.TestSpark
+import graft.TestSpark.withConf
 
 /** Differential tests for the unigram-LM learner: a compact JVM
   * reference implements the SAME quantized algorithm (qlog2 fixed-point
@@ -134,7 +135,6 @@ class UnigramSpec extends AnyFunSuite with Matchers {
 
   test("unigram_segment ≡ the dpExpr+backwalk HOF folds, incl. missing-key null edges (r20)") {
     import org.apache.spark.sql.functions.{call_function, col, lit}
-    graft.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(41)
     val alpha = "abc"
     // Randomized (w, m) rows: maps usually carry every (pos, len)
@@ -154,26 +154,38 @@ class UnigramSpec extends AnyFunSuite with Matchers {
       } yield (pos * 8 + len) -> (rnd.nextInt(2000) - 1500).toLong).toMap
       (w, m)
     }
-    val df = rows.toDF("w", "m")
-    val got = df
-      .withColumn("bp", org.apache.spark.sql.functions.expr(Unigram.dpExpr))
-      .withColumn("pieces_old", org.apache.spark.sql.functions.expr(Unigram.backwalkExpr))
-      .withColumn("pieces_new",
-        call_function("unigram_segment", col("w"), col("m"), lit(Unigram.MaxPiece)))
-      .select("w", "pieces_old", "pieces_new")
-      .collect()
-    got.foreach { r =>
-      withClue(s"w=${r.getString(0)}: ") {
-        r.getSeq[String](2) shouldBe r.getSeq[String](1)
+    // Once per path: the interpreted nullSafeEval and the generated
+    // code both call UnigramSegment.run. The frames are RDD-backed
+    // because a projection over a local Seq frame is folded into a
+    // LocalRelation by the optimizer, which always interprets it.
+    val paths = Seq(
+      "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+                           "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
+      "codegen" -> Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"))
+    for ((path, confs) <- paths) withClue(s"$path: ") {
+      withConf(confs: _*) {
+        val df = spark.sparkContext.parallelize(rows, 2).toDF("w", "m")
+        val got = df
+          .withColumn("bp", org.apache.spark.sql.functions.expr(Unigram.dpExpr))
+          .withColumn("pieces_old", org.apache.spark.sql.functions.expr(Unigram.backwalkExpr))
+          .withColumn("pieces_new",
+            call_function("unigram_segment", col("w"), col("m"), lit(Unigram.MaxPiece)))
+          .select("w", "pieces_old", "pieces_new")
+          .collect()
+        got.foreach { r =>
+          withClue(s"w=${r.getString(0)}: ") {
+            r.getSeq[String](2) shouldBe r.getSeq[String](1)
+          }
+        }
+        // empty word: the documented divergence — the fold would throw under
+        // ANSI (backward sequence hits element_at(..., 0)); the codegen
+        // expression returns an empty piece list
+        val empty = spark.sparkContext.parallelize(Seq(("", Map.empty[Int, Long])), 1).toDF("w", "m")
+          .select(call_function("unigram_segment", col("w"), col("m"), lit(Unigram.MaxPiece)))
+          .collect()
+        empty.head.getSeq[String](0) shouldBe Seq.empty
       }
     }
-    // empty word: the documented divergence — the fold would throw under
-    // ANSI (backward sequence hits element_at(..., 0)); the codegen
-    // expression returns an empty piece list
-    val empty = Seq(("", Map.empty[Int, Long])).toDF("w", "m")
-      .select(call_function("unigram_segment", col("w"), col("m"), lit(Unigram.MaxPiece)))
-      .collect()
-    empty.head.getSeq[String](0) shouldBe Seq.empty
   }
 
   test("every word reconstructs from its learned pieces (coverage invariant)") {

@@ -64,7 +64,6 @@ class WordPieceSpec extends AnyFunSuite with Matchers {
   }
 
   test("generator is codegen-consumed and the piece stream aggregates") {
-    graft.GraftFunctions.register(spark)
     val df = Seq((1L, "table fast"), (2L, null.asInstanceOf[String]))
       .toDF("doc_id", "text")
     val got = WordPiece.stats(df).collect()

@@ -5,13 +5,14 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
-/** The engine's SQL functions, registered by one of two routes:
+/** The engine's SQL functions and planner strategy
+  * ([[kmer.KmerCountStrategy]]), registered by one of two routes:
   *
   *  - [[GraftExtensions]] for every session the engine builds
   *    ([[GraftSession.local]]; a cluster deployment sets
   *    `spark.sql.extensions=graft.GraftExtensions`);
   *  - `adopt` ([[GraftSession]]) for a session a caller hands
-  *    [[SparkEntry]]; it adds only the functions the session lacks.
+  *    [[SparkEntry]]; it adds only what the session lacks.
   *
   * Both routes register the same arity-checked builders.
   */
@@ -133,10 +134,12 @@ object GraftFunctions {
       ext.injectFunction((FunctionIdentifier(name), info(name), b))
     }
     ext.injectOptimizerRule(_ => plans.RewriteDotProduct)
+    ext.injectPlannerStrategy(_ => kmer.KmerCountStrategy)
   }
 
-  /** Registers in `spark` each engine function its registry lacks; the
-    * ones it has are left as they are.
+  /** Registers in `spark` each engine function its registry lacks, and
+    * the engine's planner strategy if its planner lacks it; what it has
+    * is left as it is.
     */
   private[graft] def addMissing(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
@@ -144,6 +147,8 @@ object GraftFunctions {
       val id = FunctionIdentifier(name)
       if (!registry.functionExists(id)) registry.registerFunction(id, info(name), b)
     }
+    if (!spark.sessionState.planner.strategies.contains(kmer.KmerCountStrategy))
+      spark.experimental.extraStrategies :+= kmer.KmerCountStrategy
   }
 }
 

@@ -15,8 +15,8 @@ object GraftSession {
     */
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
-  /** A local session on `cpus` cores: the engine's functions and
-    * optimizer rules ([[GraftExtensions]]), one shuffle partition per
+  /** A local session on `cpus` cores: the engine's functions, optimizer
+    * rule and planner strategy ([[GraftExtensions]]), one shuffle partition per
     * core, a UTC session zone, and [[NanosAsLong]] so every harness
     * generation of `events.ts` is readable. AQE is Spark's default. Log
     * level WARN: the harness parses the mains' stdout and reads their
@@ -36,9 +36,10 @@ object GraftSession {
   }
 
   /** Prepares a session the engine did not build (a caller's, passed
-    * to [[SparkEntry]]) as [[local]] would have: sets [[NanosAsLong]]
-    * and registers each engine function its registry lacks. A session
-    * that already has the functions keeps them as they are.
+    * to [[SparkEntry]]) as [[local]] would have: sets [[NanosAsLong]],
+    * registers each engine function its registry lacks and the k-mer
+    * planner strategy if its planner lacks it. A session that already
+    * has them keeps them as they are.
     */
   def adopt(spark: SparkSession): Unit = {
     spark.conf.set(NanosAsLong, "true")

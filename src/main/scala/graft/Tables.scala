@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loading for the driver harness's TPC-H-ish test data
   * (see /root/repo/TESTDATA.md). The reference engine's only source is a
@@ -10,8 +14,47 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** The parquet table `name` under `sfDir`. Its schema is inferred (a
+    * one-task Spark job) on the first read in a session and memoized,
+    * keyed on the table's leaf files (path, length, modification time)
+    * and the session's parquet confs; a later read of the unchanged
+    * table passes the schema and launches no job. A rewritten table is
+    * inferred again.
+    */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val key = fingerprint(spark, path)
+    val memo = schemas.synchronized(schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap))
+    Option(memo.get(path)) match {
+      case Some((`key`, schema)) if key != null => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        if (key != null) memo.put(path, (key, df.schema))
+        df
+    }
+  }
+
+  /** Per session: table path → (fingerprint, inferred schema). */
+  private val schemas = new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, (String, StructType)]]
+
+  /** The leaf files of `path` (path, length, modification time) and the
+    * session's parquet confs, which change what inference returns; null
+    * when the path cannot be listed, so the read reports the error.
+    */
+  private def fingerprint(spark: SparkSession, path: String): String =
+    try {
+      val root = new Path(path)
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      def leaves(st: FileStatus): Seq[FileStatus] =
+        if (st.isDirectory) fs.listStatus(st.getPath).toSeq
+          .filterNot(c => c.getPath.getName.startsWith("_") || c.getPath.getName.startsWith("."))
+          .flatMap(leaves)
+        else Seq(st)
+      val files = leaves(fs.getFileStatus(root))
+        .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}").sorted
+      val confs = spark.conf.getAll.filter { case (k, _) => k.contains(".parquet.") }.toSeq.sorted
+      (files ++ confs.map { case (k, v) => s"$k=$v" }).mkString("\n")
+    } catch { case _: java.io.IOException => null }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame =
     normalizeTs(table(spark, sfDir, "lineitem"), "l_shipdate")

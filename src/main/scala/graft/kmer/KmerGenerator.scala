@@ -70,9 +70,9 @@ final class KmerWindowsArrayData(s: UTF8String, k: Int) extends ReadOnlyArrayDat
   * collection.
   *
   * Counting does not go through this generator: [[Kmers.kmerCounts]]
-  * aggregates [[KmerCodeGenerator]]'s packed codes. This one yields the
-  * window relation itself ([[Kmers.kmersGen]]), the distinct-count
-  * queries and the dedup shingles.
+  * is one [[KmerCount]] node. This one yields the window relation
+  * itself ([[Kmers.kmersGen]]), the distinct-count queries and the dedup
+  * shingles.
   */
 case class KmerGenerator(child: Expression, k: Int)
     extends UnaryExpression with CollectionGenerator {
@@ -102,9 +102,9 @@ case class KmerGenerator(child: Expression, k: Int)
     copy(child = newChild)
 }
 
-/** The packed-key kernels shared by [[KmerCodeGenerator]], [[KmerDecode]]
-  * and their generated code. A window made only of `A`/`C`/`G`/`T`
-  * packs at 2 bits a base (A=0 C=1 G=2 T=3, first base most
+/** The packed-key kernels shared by [[KmerWindowCursor]],
+  * [[KmerPartitionCounter]], [[KmerDecode]] and their generated code. A
+  * window made only of `A`/`C`/`G`/`T` packs at 2 bits a base (A=0 C=1 G=2 T=3, first base most
   * significant) into a BIGINT, so up to 32 bases fit — the key a
   * dedicated k-mer counter hashes (Jellyfish, Marçais & Kingsford 2011).
   */
@@ -112,10 +112,9 @@ object KmerCodes {
   /** Widest window that packs into a BIGINT. */
   val MaxPackedK = 32
 
-  /** Widest window whose rows may pre-count their leading ACGT run in a
-    * dense `int[4^k]` (4 MB at k = 10). A constant, not a setting: the
-    * table is only built for a row with at least 4^k windows, so its
-    * cost never exceeds the row's own window count.
+  /** Widest window [[KmerPartitionCounter]] counts in a dense `int[4^k]`
+    * per partition (4 MB at k = 10); wider ACGT windows are sorted in
+    * chunks instead. A constant, not a setting.
     */
   val DenseMaxK = 10
 
@@ -132,49 +131,6 @@ object KmerCodes {
 
   /** The low 2k bits. */
   def mask(k: Int): Long = if (k >= 32) -1L else (1L << (2 * k)) - 1
-
-  // The dense-prefix loops below are methods, not constructor code in
-  // KmerCodesArrayData: there HotSpot did not compile them (46 ms instead
-  // of 1.5 ms for a 300 kb row on a 4-vCPU host).
-
-  /** Length of the leading `ACGT` run of `bytes`. */
-  def acgtRun(bytes: Array[Byte]): Int = {
-    var run = 0
-    while (run < bytes.length && base(bytes(run)) >= 0) run += 1
-    run
-  }
-
-  /** Count of each code among the width-k windows of the ACGT run
-    * `bytes[0, run)`, in an `int[4^k]` indexed by code.
-    */
-  def countWindows(bytes: Array[Byte], run: Int, k: Int): Array[Int] = {
-    val m = (1 << (2 * k)) - 1
-    val cnt = new Array[Int](m + 1)
-    var c = 0
-    var j = 0
-    while (j < k - 1) { c = (c << 2) | base(bytes(j)); j += 1 }
-    while (j < run) {
-      c = ((c << 2) | base(bytes(j))) & m
-      cnt(c) += 1
-      j += 1
-    }
-    cnt
-  }
-
-  /** Moves the non-zero counts of `cnt` to its front, in code order, with
-    * their codes into `codes`; returns how many there are. In place: slot
-    * d <= c has been read before it is written.
-    */
-  def compact(cnt: Array[Int], codes: Array[Int]): Int = {
-    var d = 0
-    var c = 0
-    while (c < cnt.length) {
-      val x = cnt(c)
-      if (x != 0) { codes(d) = c; cnt(d) = x; d += 1 }
-      c += 1
-    }
-    d
-  }
 
   /** The width-k window a packed code stands for. */
   def decode(code: Long, k: Int): UTF8String = {
@@ -194,128 +150,116 @@ object KmerCodes {
     }
 }
 
-/** Lazily-evaluated rows `(code, word, n)` for all width-k windows of a
-  * string, the collection behind [[KmerCodeGenerator]]. A window made
-  * only of `ACGT` with k <= 32 is `(code, null, 1)`; any other window
-  * (lowercase, `N`, text, multibyte, or k > 32) is `(0, window, 1)`, so
-  * the key (code, word) depends only on the window's content.
+/** The width-k windows of one string, each classified by its content:
+  * a window made only of `ACGT` with k <= 32 packs into a code (2 bits a
+  * base, [[KmerCodes]]); any other (lowercase, `N`, text, multibyte, or
+  * k > 32) is its string. The one classification kernel of
+  * [[KmerCodesArrayData]] and [[KmerPartitionCounter]].
   *
-  * Dense prefix: when the row is ASCII, has at least 4^k windows and
-  * k <= [[KmerCodes.DenseMaxK]], the construction counts the windows of
-  * the row's leading ACGT run into an `int[4^k]` and the first elements
-  * are one `(code, null, count)` per distinct code. The windows from the
-  * run's end on go out one at a time, so a text row (whose run ends
-  * within a byte or two) costs one short scan.
-  *
-  * One at a time, an ASCII row keeps a rolling code and the position of
-  * the last non-ACGT byte, so in-order access (the Generate loop's
-  * pattern) costs O(1) a window; a multibyte row checks each window's
-  * bytes. Every element is written into one reused row: the generated
-  * loop reads its fields before it asks for the next element.
+  * An ASCII row keeps a rolling code and the position of the last
+  * non-ACGT byte, so in-order access costs O(1) a window; a multibyte
+  * row checks each window's bytes.
   */
-final class KmerCodesArrayData(s: UTF8String, k: Int) extends ReadOnlyArrayData {
+final class KmerWindowCursor(s: UTF8String, k: Int) {
   import KmerCodes.base
 
   private[this] val windows = new KmerWindowsArrayData(s, k)
   private[this] val bytes = windows.bytes
-  private[this] val packs = k <= KmerCodes.MaxPackedK
+  private[this] val packable = k <= KmerCodes.MaxPackedK
+  private[this] val rolling = packable && windows.ascii
   private[this] val mask = KmerCodes.mask(k)
 
-  // dense prefix: element j < nDense is codes(j) seen counts(j) times;
-  // later elements are the windows starting at `first` onwards
-  private[this] var codes: Array[Int] = null
-  private[this] var counts: Array[Int] = null
-  private[this] var nDense = 0
-  private[this] var first = 0
-  locally {
-    val size = 1 << (2 * k)
-    if (windows.ascii && k <= KmerCodes.DenseMaxK && windows.numElements() >= size) {
-      val run = KmerCodes.acgtRun(bytes)
-      if (run >= k) {
-        counts = KmerCodes.countWindows(bytes, run, k)
-        codes = new Array[Int](math.min(size, run - k + 1))
-        nDense = KmerCodes.compact(counts, codes)
-        first = run - k + 1
-      }
-    }
-  }
+  /** The number of windows. */
+  val size: Int = windows.numElements()
 
-  // rolling state of the one-at-a-time ASCII path: `code` holds the
-  // last k bases up to the byte before window `next` ends
+  // rolling state: `packed` holds the last k bases up to the byte
+  // before window `next` ends
   private[this] var next = -1
-  private[this] var code = 0L
+  private[this] var packed = 0L
   private[this] var lastBad = 0
 
-  private[this] val row = new SpecificInternalRow(Seq(LongType, StringType, LongType))
+  /** The code of the last window [[packs]] accepted. */
+  def code: Long = packed
 
-  override def numElements(): Int = nDense + windows.numElements() - first
+  /** Window `p` as a string. */
+  def window(p: Int): UTF8String = windows.getUTF8String(p)
+
+  /** Whether window `p` packs; if so, [[code]] holds its code. */
+  def packs(p: Int): Boolean =
+    if (rolling) {
+      if (p != next) restart(p)
+      roll(p + k - 1)
+      next = p + 1
+      lastBad < p
+    } else packable && packMultibyte(window(p))
+
+  private def restart(p: Int): Unit = {
+    packed = 0L
+    lastBad = p - 1
+    var j = p
+    while (j < p + k - 1) { roll(j); j += 1 }
+  }
 
   private def roll(j: Int): Unit = {
     val b = base(bytes(j))
     if (b < 0) lastBad = j
-    code = ((code << 2) | (b & 3)) & mask
+    packed = ((packed << 2) | (b & 3)) & mask
   }
 
-  private def emit(c: Long, w: UTF8String, n: Long): InternalRow = {
-    row.setLong(0, c)
-    if (w == null) row.setNullAt(1) else row.update(1, w)
-    row.setLong(2, n)
+  private def packMultibyte(w: UTF8String): Boolean = {
+    var pure = w.numBytes == k
+    var c = 0L
+    var j = 0
+    while (pure && j < k) {
+      val b = base(w.getByte(j))
+      pure = b >= 0
+      c = (c << 2) | (b & 3)
+      j += 1
+    }
+    if (pure) packed = c
+    pure
+  }
+}
+
+/** Lazily-evaluated rows `(code, word, n)` for all width-k windows of a
+  * string, the collection behind [[KmerCodeGenerator]]: a window that
+  * packs ([[KmerWindowCursor]]) is `(code, null, 1)`, any other
+  * `(0, window, 1)`, so the key (code, word) depends only on the
+  * window's content. Every element is written into one reused row: the
+  * generated loop reads its fields before it asks for the next element.
+  */
+final class KmerCodesArrayData(s: UTF8String, k: Int) extends ReadOnlyArrayData {
+  private[this] val cursor = new KmerWindowCursor(s, k)
+  private[this] val row = new SpecificInternalRow(Seq(LongType, StringType, LongType))
+
+  override def numElements(): Int = cursor.size
+
+  override def getStruct(p: Int, numFields: Int): InternalRow = {
+    if (cursor.packs(p)) {
+      row.setLong(0, cursor.code)
+      row.setNullAt(1)
+    } else {
+      row.setLong(0, 0L)
+      row.update(1, cursor.window(p))
+    }
+    row.setLong(2, 1L)
     row
   }
-
-  override def getStruct(i: Int, numFields: Int): InternalRow =
-    if (i < nDense) emit(codes(i), null, counts(i))
-    else {
-      val p = first + i - nDense
-      if (!packs) emit(0L, windows.getUTF8String(p), 1L)
-      else if (windows.ascii) {
-        if (p != next) {
-          code = 0L
-          lastBad = p - 1
-          var j = p
-          while (j < p + k - 1) { roll(j); j += 1 }
-        }
-        roll(p + k - 1)
-        next = p + 1
-        if (lastBad < p) emit(code, null, 1L) else emit(0L, windows.getUTF8String(p), 1L)
-      } else {
-        val w = windows.getUTF8String(p)
-        var pure = w.numBytes == k
-        var c = 0L
-        var j = 0
-        while (pure && j < k) {
-          val b = base(w.getByte(j))
-          pure = b >= 0
-          c = (c << 2) | (b & 3)
-          j += 1
-        }
-        if (pure) emit(c, null, 1L) else emit(0L, w, 1L)
-      }
-    }
 
   override def get(ordinal: Int, dataType: DataType): AnyRef = getStruct(ordinal, 3)
   override def array: Array[Any] = Array.tabulate[Any](numElements())(getStruct(_, 3).copy())
 }
 
 /** Catalyst Generator `kmer_codes(text, k)`: rows `(code BIGINT, word
-  * STRING, n BIGINT)` over all width-k windows (see
+  * STRING, n BIGINT)`, one per width-k window (see
   * [[KmerCodesArrayData]]), so `groupBy(code, word).sum(n)` counts
   * every distinct window exactly and [[KmerDecode]] turns a packed key
-  * back into its string once per output row. The counting path of
-  * [[Kmers.kmerCounts]]: DNA windows shuffle and hash as one BIGINT
-  * instead of a k-byte string, and a long DNA row sends at most 4^k
-  * pre-counted rows into the partial aggregate instead of one per
-  * window.
+  * back into its string. The per-window SQL form of the keys
+  * [[KmerCount]] counts per partition.
   *
   * A `CollectionGenerator` with `inline = true`, like the text
   * generators, so `GenerateExec` runs the loop inside WholeStageCodegen;
   * the interpreted `eval` walks the same collection.
-  *
-  * Scale notes: a row's expansion holds the row's bytes plus, in the
-  * dense mode, one `int[4^k]` (at most 4 MB) and its distinct codes —
-  * never more than the row's window count in ints. Output rows per DNA
-  * row drop from len − k + 1 to at most 4^k, which is what the partial
-  * aggregate and the shuffle see.
   */
 case class KmerCodeGenerator(child: Expression, k: Int)
     extends UnaryExpression with CollectionGenerator {
@@ -349,7 +293,7 @@ case class KmerCodeGenerator(child: Expression, k: Int)
 }
 
 /** `kmer_decode(code, k)`: the width-k ACGT string a packed
-  * [[KmerCodeGenerator]] code stands for; one kernel
+  * [[KmerCodeGenerator]] or [[KmerCount]] code stands for; one kernel
   * ([[KmerCodes.decode]]) on the interpreted and generated paths. It
   * takes every k the generators take, so [[Kmers.kmerCounts]] is one
   * plan for all k; above 32 no window packs, and a code reads as

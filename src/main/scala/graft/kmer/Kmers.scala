@@ -9,29 +9,38 @@ import graft.{EngineQuery, Tables}
   * `src/GPU_Module/GPU.cpp:32-56` Map, `:61-111` Reduce,
   * `src/main.cpp:55-73` thresholded/deduped output).
   *
-  * Spark-first design: the Map kernel (one work-item per character
-  * position emitting a `Mapped{word, v=1}` record) becomes a generated
-  * column explode; the sort+segmented-sum Reduce (reference
-  * `src/CPU_Module/CPU.cpp:75-122`) is subsumed by Catalyst's
-  * partial+final HashAggregate pair — the same map-side `v=1` /
-  * reduce-side sum decomposition, picked automatically. The reference's
-  * `'\0'` file barrier (`src/GPU_Module/GPU.cpp:36-40`) is free here:
-  * windows are generated per row, and a row never spans files.
+  * Spark-first design: the window relation ([[kmersGen]]) is a
+  * generated column explode (one row per character position, the Map
+  * kernel's `Mapped{word, v=1}` records). Counting ([[kmerCounts]]) is
+  * the reference's Map → sort → segmented-sum Reduce (reference
+  * `src/CPU_Module/CPU.cpp:75-122`) moved into Spark's plan as one
+  * [[KmerCount]] node, planned by [[KmerCountStrategy]]:
   *
-  * Counting ([[kmerCounts]]) does not key on the window string: an ACGT
-  * window with k <= 32 is a 2-bit packed BIGINT code, and a long DNA
-  * row pre-counts its leading ACGT run before the aggregate sees it
-  * ([[KmerCodeGenerator]]). Strings come back once per output row,
-  * above the final aggregate and after any count filter.
+  *  - `KmerCountExec`, per scan partition: ACGT windows with k <= 32 as
+  *    2-bit packed codes, counted in one dense `int[4^k]` at k <= 10 or
+  *    in radix-sorted, run-length-encoded `long[]` chunks above; any
+  *    other window as its string in a bounded pre-count
+  *    ([[KmerPartitionCounter]]); one `(code, word, n)` row per key and
+  *    flush, none per window;
+  *  - `Exchange hashpartitioning(code, word)` into
+  *    `spark.sql.shuffle.partitions`, by number, so AQE keeps every
+  *    reduce task;
+  *  - Spark's `SortExec` on (code, word), then `KmerSumExec`, which sums
+  *    equal neighbours in O(1) memory.
   *
-  * Scale notes (100 TB): the explode is the only expansion point — a
-  * k-char window per input character, or at most 4^k pre-counted codes
-  * plus the windows past the ACGT run for a long DNA row at k <= 10.
-  * Aggregation shuffles on the 8-byte code (a string only for non-ACGT
-  * windows), with map-side partial aggregation collapsing the 4^k key
-  * space before the exchange, so shuffle volume is bounded by distinct
-  * k-mers per partition, not corpus size. Decoding costs one k-byte
-  * string per output row. No driver-side state.
+  * `kmer_decode` restores a code's string once per output row, above the
+  * count and after any count filter. The reference's `'\0'` file
+  * barrier (`src/GPU_Module/GPU.cpp:36-40`) is free here: windows are
+  * taken per row, and a row never spans files.
+  *
+  * Scale notes (100 TB): no row per window exists anywhere on the
+  * counting path. A map task holds its input row's bytes plus either
+  * `4^k` ints (4 MB at k = 10) or one chunk of at most 4M codes with as
+  * much radix scratch (64 MB), plus a string map of at most 65,536 keys;
+  * its output is at most one row per distinct key and flush, so shuffle
+  * volume is bounded by distinct k-mers per partition (per chunk above
+  * k = 10), not corpus size. The reduce side's memory is Spark's
+  * `SortExec`, which spills. No driver-side state.
   */
 object Kmers {
   /** Max window width, kept for semantic parity with the reference's
@@ -46,33 +55,32 @@ object Kmers {
     * shorter than k yield nothing (`setsize=0` guard, reference
     * `src/main.cpp:133`).
     */
-  def kmersGen(df: DataFrame, textCol: String, k: Int): DataFrame =
-    generate(df, textCol, k, s"kmer_windows($textCol, $k) AS word")
-
-  /** The rows of `generator` over the texts with at least one window. */
-  private def generate(df: DataFrame, textCol: String, k: Int, generator: String): DataFrame = {
-    require(k >= 1 && k <= MaxK, s"k must be in [1, $MaxK], got $k")
-    graft.Partitioning.fanOut(df.where(length(col(textCol)) >= k)).selectExpr(generator)
+  def kmersGen(df: DataFrame, textCol: String, k: Int): DataFrame = {
+    checkK(k)
+    graft.Partitioning.fanOut(df.where(length(col(textCol)) >= k))
+      .selectExpr(s"kmer_windows($textCol, $k) AS word")
   }
+
+  private def checkK(k: Int): Unit = require(k >= 1 && k <= MaxK, s"k must be in [1, $MaxK], got $k")
 
   /** k-mer → occurrence count (the full Map+Reduce, reference
     * `src/main.cpp:105-248`). Output: (word STRING NOT NULL, cnt BIGINT
     * NOT NULL).
     *
-    * Aggregates `kmer_codes` rows on (code, word): ACGT windows as
-    * packed codes, every other window as its string, each key decided by
-    * the window's content alone, so one pass is exact. `kmer_decode`
-    * runs in the projection above the final aggregate — per output row,
-    * and after a filter on `cnt` such as [[thresholded]]'s, which
-    * Catalyst places below this projection.
+    * One [[KmerCount]] node counts the windows on (code, word): ACGT
+    * windows as packed codes, every other window as its string, each key
+    * decided by the window's content alone, so one pass is exact.
+    * `kmer_decode` runs in the projection above it — per output row, and
+    * after a filter on `cnt` such as [[thresholded]]'s, which Catalyst
+    * places below this projection. No fan-out: the counter emits no row
+    * per window, so the scan's partitions feed it directly.
     */
-  def kmerCounts(df: DataFrame, textCol: String, k: Int): DataFrame =
-    generate(df, textCol, k, s"kmer_codes($textCol, $k)")
-      .groupBy("code", "word").agg(sum("n").as("n"))
-      .select(
-        coalesce(col("word"), expr(s"kmer_decode(code, $k)")).as("word"),
-        // sum is nullable to Catalyst; every group has n >= 1
-        coalesce(col("n"), lit(0L)).as("cnt"))
+  def kmerCounts(df: DataFrame, textCol: String, k: Int): DataFrame = {
+    checkK(k)
+    KmerCount.frame(df, textCol, k).select(
+      coalesce(col("word"), expr(s"kmer_decode(code, $k)")).as("word"),
+      col("n").as("cnt"))
+  }
 
   /** Reference-faithful output relation: counts > 1, deduped, formatted
     * sort (reference `print_mapped_counts`, `src/main.cpp:55-73`).

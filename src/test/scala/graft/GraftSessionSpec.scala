@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -24,7 +25,7 @@ class GraftSessionSpec extends AnyFunSuite with Matchers {
     ids.foreach(registry.dropFunction)
     foreign.conf.set(nanosAsLong, "false")
     ids.filter(registry.functionExists) shouldBe empty
-    // kmer_count runs kmer_codes and kmer_decode; blocklist_match_stats ac_matches
+    // kmer_count runs kmer_decode; blocklist_match_stats ac_matches
     for (q <- Seq("kmer_count", "blocklist_match_stats"))
       withClue(s"$q: ") {
         SparkEntry.queries(q)(foreign, dir).collect() should not be empty
@@ -32,6 +33,26 @@ class GraftSessionSpec extends AnyFunSuite with Matchers {
     ids should have size 19
     ids.filterNot(registry.functionExists) shouldBe empty
     foreign.conf.get(nanosAsLong) shouldBe "true"
+  }
+
+  test("SparkEntry plans kmer_count on a session built without the engine's extensions") {
+    val dir = s"${OutDir.base}/graft_bare_sf"
+    TestSpark.spark.createDataFrame(Seq((1L, "ACGTACGT GATTACA"), (2L, "a plain text row")))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    // create(): a new session on the running context, without GraftExtensions
+    val bare = SparkSession.builder().create()
+    try {
+      bare.conf.set("spark.sql.shuffle.partitions", "2")
+      bare.sessionState.planner.strategies should not contain kmer.KmerCountStrategy
+      SparkEntry.queries("kmer_count")(bare, dir).collect().map(r => r.getString(0) -> r.getLong(1)) should
+        contain allOf ("ACG" -> 2L, "GAT" -> 1L, "pla" -> 1L)
+      bare.sessionState.planner.strategies.count(_ == kmer.KmerCountStrategy) shouldBe 1
+      GraftSession.adopt(bare)
+      bare.sessionState.planner.strategies.count(_ == kmer.KmerCountStrategy) shouldBe 1
+    } finally {
+      SparkSession.setActiveSession(TestSpark.spark)
+      SparkSession.setDefaultSession(TestSpark.spark)
+    }
   }
 
   test("adopt leaves the functions of a session that already has them as they are") {

@@ -8,6 +8,14 @@ import org.apache.spark.sql.SparkSession
 object TestSpark {
   lazy val spark: SparkSession = GraftSession.local(2)
 
+  /** The two evaluation paths a custom expression's differential spec
+    * runs: forced-interpreted and forced-codegen, each as its confs.
+    */
+  val DifferentialPaths: Seq[(String, Seq[(String, String)])] = Seq(
+    "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+                         "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
+    "codegen" -> Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"))
+
   /** Runs `body` with the session confs `kv` set, then restores each
     * conf's previous value (or unsets it).
     */

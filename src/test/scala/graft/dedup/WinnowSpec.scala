@@ -3,6 +3,7 @@ package graft.dedup
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.TestSpark
+import graft.TestSpark.{DifferentialPaths, withConf}
 import graft.text.RollingHash
 
 class WinnowSpec extends AnyFunSuite with Matchers {
@@ -224,29 +225,36 @@ class WinnowSpec extends AnyFunSuite with Matchers {
       val posB = tb.indexOf(core) + (posA - ta.indexOf(core))
       (ta, posA, tb, posB)
     }
-    val df = rows.toDF("ta", "pos_a", "tb", "pos_b")
-      .withColumn("la", org.apache.spark.sql.functions.length(col("ta")))
-      .withColumn("lb", org.apache.spark.sql.functions.length(col("tb")))
-      .withColumn("lmax", org.apache.spark.sql.functions.least(col("pos_a"), col("pos_b")) - 1)
-      .withColumn("rmax",
-        org.apache.spark.sql.functions.least(
-          col("la") - col("pos_a"), col("lb") - col("pos_b")) - (k - 1))
-      .withColumn("lblk", expr(Winnow.extBlocks(-1, "lmax")))
-      .withColumn("rblk", expr(Winnow.extBlocks(+1, "rmax")))
-      .withColumn("lext_old", expr(Winnow.extRefine(-1, "lmax", "lblk")))
-      .withColumn("rext_old", expr(Winnow.extRefine(+1, "rmax", "rblk")))
-      .withColumn("lext_new", call_function("common_run_len",
-        col("ta"), col("pos_a"), col("tb"), col("pos_b"), col("lmax"), lit(-1)))
-      .withColumn("rext_new", call_function("common_run_len",
-        col("ta"), col("pos_a") + lit(k - 1), col("tb"), col("pos_b") + lit(k - 1),
-        col("rmax"), lit(1)))
-    df.select("ta", "pos_a", "lext_old", "lext_new", "rext_old", "rext_new")
-      .collect().foreach { r =>
-        withClue(s"ta=${r.getString(0)} pos_a=${r.getInt(1)}: ") {
-          r.getLong(3) shouldBe r.getLong(2)
-          r.getLong(5) shouldBe r.getLong(4)
-        }
+    // Once per path, on RDD-backed frames: a projection over a local Seq
+    // frame is folded into a LocalRelation by the optimizer, which always
+    // interprets it, so the generated code would never run.
+    for ((path, confs) <- DifferentialPaths) withClue(s"$path: ") {
+      withConf(confs: _*) {
+        val df = spark.sparkContext.parallelize(rows, 2).toDF("ta", "pos_a", "tb", "pos_b")
+          .withColumn("la", org.apache.spark.sql.functions.length(col("ta")))
+          .withColumn("lb", org.apache.spark.sql.functions.length(col("tb")))
+          .withColumn("lmax", org.apache.spark.sql.functions.least(col("pos_a"), col("pos_b")) - 1)
+          .withColumn("rmax",
+            org.apache.spark.sql.functions.least(
+              col("la") - col("pos_a"), col("lb") - col("pos_b")) - (k - 1))
+          .withColumn("lblk", expr(Winnow.extBlocks(-1, "lmax")))
+          .withColumn("rblk", expr(Winnow.extBlocks(+1, "rmax")))
+          .withColumn("lext_old", expr(Winnow.extRefine(-1, "lmax", "lblk")))
+          .withColumn("rext_old", expr(Winnow.extRefine(+1, "rmax", "rblk")))
+          .withColumn("lext_new", call_function("common_run_len",
+            col("ta"), col("pos_a"), col("tb"), col("pos_b"), col("lmax"), lit(-1)))
+          .withColumn("rext_new", call_function("common_run_len",
+            col("ta"), col("pos_a") + lit(k - 1), col("tb"), col("pos_b") + lit(k - 1),
+            col("rmax"), lit(1)))
+        df.select("ta", "pos_a", "lext_old", "lext_new", "rext_old", "rext_new")
+          .collect().foreach { r =>
+            withClue(s"ta=${r.getString(0)} pos_a=${r.getInt(1)}: ") {
+              r.getLong(3) shouldBe r.getLong(2)
+              r.getLong(5) shouldBe r.getLong(4)
+            }
+          }
       }
+    }
   }
 
   test("longest dup substring: sub-guarantee matches are dropped, not misreported") {

@@ -3,7 +3,7 @@ package graft.kmer
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 import graft.TestSpark
-import graft.TestSpark.withConf
+import graft.TestSpark.{DifferentialPaths, withConf}
 
 /** ScalaCheck twin of the reference's golden-output verifier
   * (`/root/reference/scripts/verifier.py`): the engine must agree with a
@@ -112,12 +112,50 @@ object KmerProps extends Properties("Kmers") {
       engine == naiveCounts(texts, k) && engine.values.sum == total
     }
 
+  /** The counts through the per-window `kmer_codes` generator, a hash
+    * aggregate and `kmer_decode`, on an RDD-backed frame (a local `Seq`
+    * frame's projection would be folded into a LocalRelation and never
+    * run generated code).
+    */
+  private def codesCounts(texts: Seq[String], k: Int): Map[String, Long] = {
+    import spark.implicits._
+    spark.sparkContext.parallelize(texts, 2).toDF("text")
+      .selectExpr(s"kmer_codes(text, $k)")
+      .groupBy("code", "word").sum("n")
+      .selectExpr(s"coalesce(word, kmer_decode(code, $k))", "`sum(n)`")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+  }
+
   property("kmer_codes and kmer_decode agree on the interpreted and codegen paths") =
     forAll(genMixedCase) { case (texts, k) =>
-      val interpreted = withConf(
-        "spark.sql.codegen.wholeStage" -> "false",
-        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(engineCounts(texts, k))
-      val codegen = withConf("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(engineCounts(texts, k))
-      interpreted == codegen && codegen == naiveCounts(texts, k)
+      def both = (engineCounts(texts, k), codesCounts(texts, k))
+      val Seq(interpreted, codegen) = DifferentialPaths.map { case (_, confs) => withConf(confs: _*)(both) }
+      val naive = naiveCounts(texts, k)
+      interpreted == codegen && codegen == (naive, naive)
+    }
+
+  // The partition counter's three paths at every k that selects one: the
+  // dense table (k <= 10), sorted chunks (11 <= k <= 32) and the string
+  // pre-count (non-ACGT windows, multibyte rows, k > 32), on corpora
+  // mixing them in one partition.
+  private val counterKs = Seq(1, 3, 8, 10, 11, 31, 32, 33)
+
+  private def genDna(maxLen: Int): Gen[String] =
+    Gen.chooseNum(0, maxLen).flatMap(n => Gen.listOfN(n, Gen.oneOf('A', 'C', 'G', 'T')).map(_.mkString))
+
+  private val genCounterCorpus: Gen[List[String]] = for {
+    short <- Gen.chooseNum(0, 5).flatMap(Gen.listOfN(_, genShortMixed))
+    unicode <- Gen.chooseNum(0, 3).flatMap(Gen.listOfN(_, genUnicodeText))
+    dna <- Gen.chooseNum(1, 3).flatMap(Gen.listOfN(_, genDna(400)))
+    mark <- Gen.oneOf("", "N", "a", "é", "日")
+  } yield short ++ unicode ++ dna.map(d => d.take(d.length / 2) + mark + d.drop(d.length / 2))
+
+  property("the k-mer count matches the sliding-window reference at k in {1, 3, 8, 10, 11, 31, 32, 33}") =
+    forAll(genCounterCorpus) { texts =>
+      counterKs.forall { k =>
+        val engine = engineCounts(texts, k)
+        val total = texts.map(t => math.max(0, t.codePointCount(0, t.length) - k + 1).toLong).sum
+        engine == naiveCounts(texts, k) && engine.values.sum == total
+      }
     }
 }

@@ -1,9 +1,13 @@
 package graft.kmer
 
 import org.apache.spark.sql.AnalysisException
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
-import org.apache.spark.sql.execution.WholeStageCodegenExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RoundRobinPartitioning}
+import org.apache.spark.sql.execution.{SortExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -88,17 +92,21 @@ class KmersSpec extends AnyFunSuite with Matchers {
       // codegen'd operators carry the `*(n)` prefix
       df.queryExecution.executedPlan.toString should include regex """\*\(\d+\) Generate"""
 
-      // the counting path: kmer_codes and kmer_decode, both codegen'd
+      // the counting path: the KmerCount operators, with kmer_decode
+      // codegen'd in the stage above them
       val counts = Kmers.kmerCounts(Seq("GATTACA", "GATTNCA").toDF("text"), "text", 3)
       counts.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe Map(
         "GAT" -> 2L, "ATT" -> 2L, "TTA" -> 1L, "TAC" -> 1L, "ACA" -> 1L,
         "TTN" -> 1L, "TNC" -> 1L, "NCA" -> 1L)
-      counts.queryExecution.executedPlan.toString should include regex """\*\(\d+\) Generate kmer_codes"""
-      val stages = new AdaptiveSparkPlanHelper {}
-        .collect(counts.queryExecution.executedPlan) { case w: WholeStageCodegenExec => w }
+      val plan = counts.queryExecution.executedPlan
+      aqe.collect(plan) { case e: KmerCountExec => e } should have size 1
+      aqe.collect(plan) { case e: KmerSumExec => e } should have size 1
+      val stages = aqe.collect(plan) { case w: WholeStageCodegenExec => w }
       stages.exists(_.child.exists(_.expressions.exists(_.exists(_.isInstanceOf[KmerDecode])))) shouldBe true
     } finally spark.conf.set("spark.sql.codegen.fallback", "true")
   }
+
+  private val aqe = new AdaptiveSparkPlanHelper {}
 
   private def decodes(p: LogicalPlan): Boolean =
     p.expressions.exists(_.exists(_.isInstanceOf[KmerDecode]))
@@ -106,13 +114,72 @@ class KmersSpec extends AnyFunSuite with Matchers {
   test("kmer_decode runs only above the aggregate, after thresholded's count filter") {
     val df = Kmers.thresholded(Seq("ACGTACGTNACGT", "acgtACGT").toDF("text"), "text", 4)
     val plan = df.queryExecution.optimizedPlan
-    val agg = plan.collectFirst { case a: Aggregate => a }.get
-    agg.aggregateExpressions.exists(_.exists(_.isInstanceOf[KmerDecode])) shouldBe false
-    agg.child.exists(decodes) shouldBe false
-    // the decode's projection reads the count filter's output, which reads the aggregate
+    val count = plan.collectFirst { case c: KmerCount => c }.get
+    count.exists(decodes) shouldBe false
+    // the decode's projection reads the count filter's output, which reads the count
     val proj = plan.collectFirst { case p: Project if decodes(p) => p }.get
-    proj.child should matchPattern { case Filter(_, _: Aggregate) => }
+    proj.child should matchPattern { case Filter(_, _: KmerCount) => }
     df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe Map("ACGT" -> 4L)
+  }
+
+  test("the counting plan: partition counter, by-number exchange, sort, segmented sum") {
+    val texts = Seq("ACGTACGTNACGT", "acgtACGT", "GATTACA")
+    val df = Kmers.thresholded(texts.toDF("text"), "text", 3)
+    df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe naive(texts, 3).filter(_._2 > 1)
+    val plan = df.queryExecution.executedPlan
+    aqe.collect(plan) { case a: HashAggregateExec => a } shouldBe empty
+    val exchanges = aqe.collect(plan) { case e: ShuffleExchangeExec => e }
+    exchanges.map(_.outputPartitioning).collect { case r: RoundRobinPartitioning => r } shouldBe empty
+    // one exchange, by number and on (code, word), so AQE reads every reduce partition as is
+    val Seq(exchange) = exchanges
+    exchange.shuffleOrigin shouldBe REPARTITION_BY_NUM
+    exchange.child shouldBe a[KmerCountExec]
+    val HashPartitioning(keys, n) = exchange.outputPartitioning
+    keys.map(_.sql) shouldBe Seq("code", "word")
+    n shouldBe spark.conf.get("spark.sql.shuffle.partitions").toInt
+    aqe.collect(plan) { case r: AQEShuffleReadExec => r } shouldBe empty
+    val Seq(sum) = aqe.collect(plan) { case s: KmerSumExec => s }
+    sum.child.exists(_.isInstanceOf[SortExec]) shouldBe true
+  }
+
+  private def naive(texts: Seq[String], k: Int): Map[String, Long] =
+    texts.flatMap(_.sliding(k).filter(_.length == k)).groupBy(identity).view.mapValues(_.size.toLong).toMap
+
+  /** The counter's rows over `texts`, each key's counts summed, decoded. */
+  private def counterTotals(texts: Seq[String], k: Int, chunk: Int, strings: Int): (Int, Map[String, Long]) = {
+    val rows = new KmerPartitionCounter(texts.iterator.map(UTF8String.fromString), k, chunk, strings)
+      .map(r => (if (r.isNullAt(1)) KmerCodes.decode(r.getLong(0), k).toString else r.getUTF8String(1).toString,
+        r.getLong(2)))
+      .toVector
+    (rows.size, rows.groupMapReduce(_._1)(_._2)(_ + _))
+  }
+
+  test("sortRuns radix-sorts and run-length encodes a chunk") {
+    val rnd = new scala.util.Random(11)
+    for (bits <- Seq(2, 22, 62, 64)) {
+      val pool = Array.fill(300)(rnd.nextLong() & KmerCodes.mask(bits / 2))
+      val codes = Array.fill(5000)(pool(rnd.nextInt(pool.length)))
+      val a = codes.clone()
+      val tmp = new Array[Long](a.length)
+      val m = KmerPartitionCounter.sortRuns(a, tmp, a.length, bits)
+      val expected = codes.groupBy(identity).view.mapValues(_.length.toLong).toSeq
+        .sortWith((x, y) => java.lang.Long.compareUnsigned(x._1, y._1) < 0)
+      a.take(m).toSeq.zip(tmp.take(m).toSeq) shouldBe expected
+    }
+  }
+
+  test("the partition counter flushes a full chunk and a full string map, and its sums stay exact") {
+    val rnd = new scala.util.Random(5)
+    val dna = Seq.fill(3000)("ACGT".charAt(rnd.nextInt(4))).mkString
+    val texts = Seq(dna, dna.take(1500) + "N" + dna.drop(1500) + "acgt", "ACGTé" + dna.take(40), "AC")
+    for (k <- Seq(3, 11, 31, 32, 33)) withClue(s"k=$k: ") {
+      val (_, unbounded) = counterTotals(texts, k, KmerPartitionCounter.ChunkCapacity, KmerPartitionCounter.StringCapacity)
+      val (rows, flushed) = counterTotals(texts, k, 257, 7)
+      unbounded shouldBe naive(texts, k)
+      flushed shouldBe naive(texts, k)
+      // a chunk of 257 codes cannot hold ~9k windows: some keys went out more than once
+      if (k > KmerCodes.DenseMaxK) rows should be > flushed.size
+    }
   }
 
   test("kmerCounts and thresholded keep the (word STRING NOT NULL, cnt BIGINT NOT NULL) schema") {

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.TestSpark
+import graft.TestSpark.{DifferentialPaths, withConf}
 
 /** [[Bpe]] must reproduce the textbook single-machine BPE exactly:
   * the reference implementation below is the classic word-histogram
@@ -177,7 +178,7 @@ class BpeSpec extends AnyFunSuite with Matchers {
     // shapes: (a,a) self-merges, merges whose product feeds a later
     // merge, repeated pairs — the greedy-leftmost accumulator semantics
     // must agree fold-for-fold
-    for (trial <- 1 to 20) {
+    val trials = (1 to 20).map { trial =>
       val merges = (1 to (1 + rnd.nextInt(6))).map { _ =>
         val a = alphabet(rnd.nextInt(alphabet.length))
         val b = alphabet(rnd.nextInt(alphabet.length))
@@ -185,15 +186,23 @@ class BpeSpec extends AnyFunSuite with Matchers {
       } ++ (if (trial % 2 == 0) Seq(("a", "a"), ("aa", "a")) else Seq.empty)
       val words = (1 to 40).map(_ =>
         Array.fill(1 + rnd.nextInt(10))(alphabet(rnd.nextInt(alphabet.length))).mkString)
-      val df = words.toDF("w").select(split(col("w"), "").as("syms"))
-      val oldCol = merges.foldLeft(col("syms")) { case (c0, (a, b)) =>
-        Bpe.applyMerge(c0, a, b)
-      }
-      val newCol = call_function("bpe_merge_all", col("syms"),
-        typedlit(merges.map(_._1)), typedlit(merges.map(_._2)))
-      df.select(col("syms"), oldCol.as("old"), newCol.as("new")).collect().foreach { r =>
-        withClue(s"trial=$trial syms=${r.getSeq[String](0)} merges=$merges: ") {
-          r.getSeq[String](2) shouldBe r.getSeq[String](1)
+      (trial, merges, words)
+    }
+    // Once per path, on RDD-backed frames: a projection over a local Seq
+    // frame is folded into a LocalRelation by the optimizer, which always
+    // interprets it, so the generated code would never run.
+    for ((path, confs) <- DifferentialPaths; (trial, merges, words) <- trials) withClue(s"$path: ") {
+      withConf(confs: _*) {
+        val df = spark.sparkContext.parallelize(words, 2).toDF("w").select(split(col("w"), "").as("syms"))
+        val oldCol = merges.foldLeft(col("syms")) { case (c0, (a, b)) =>
+          Bpe.applyMerge(c0, a, b)
+        }
+        val newCol = call_function("bpe_merge_all", col("syms"),
+          typedlit(merges.map(_._1)), typedlit(merges.map(_._2)))
+        df.select(col("syms"), oldCol.as("old"), newCol.as("new")).collect().foreach { r =>
+          withClue(s"trial=$trial syms=${r.getSeq[String](0)} merges=$merges: ") {
+            r.getSeq[String](2) shouldBe r.getSeq[String](1)
+          }
         }
       }
     }

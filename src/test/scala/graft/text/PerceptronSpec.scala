@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.TestSpark
+import graft.TestSpark.{DifferentialPaths, withConf}
 
 /** [[Perceptron]] must reproduce the single-machine full-batch
   * perceptron (geometric step decay, margin ≤ 0 counted misclassified)
@@ -86,23 +87,30 @@ class PerceptronSpec extends AnyFunSuite with Matchers {
       (i.toLong, feats)
     }
     val wLit = typedlit(w)
-    val df = rows.toDF("id", "feats")
-      .selectExpr("id", "transform(feats, f -> named_struct('b', f._1, 'c', f._2)) AS feats")
-    val got = df.select(c("id"), call_function("dot_feats_w", c("feats"), wLit).as("s"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // reference: the exact HOF fold this expression replaced
-    val want = df.select(c("id"), hofAgg(c("feats"), l(0L),
-        (acc, f) => acc + element_at(wLit, (f.getField("b") + l(1L)).cast("int")) * f.getField("c"))
-        .as("s"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    got shouldBe want
-    // an out-of-range bucket means featurizer/model disagreement — it
-    // must THROW (the old fold's ANSI element_at threw; a silent null
-    // would flip `margin <= 0` rows into quietly-correct ones)
-    val bad = Seq((999L, Seq((Perceptron.Buckets + 1L, 3L)))).toDF("id", "feats")
-      .selectExpr("id", "transform(feats, f -> named_struct('b', f._1, 'c', f._2)) AS feats")
-    intercept[Exception] {
-      bad.select(call_function("dot_feats_w", c("feats"), wLit)).collect()
+    // Once per path, on RDD-backed frames: a projection over a local Seq
+    // frame is folded into a LocalRelation by the optimizer, which always
+    // interprets it, so the generated code would never run.
+    for ((path, confs) <- DifferentialPaths) withClue(s"$path: ") {
+      withConf(confs: _*) {
+        val df = spark.sparkContext.parallelize(rows, 2).toDF("id", "feats")
+          .selectExpr("id", "transform(feats, f -> named_struct('b', f._1, 'c', f._2)) AS feats")
+        val got = df.select(c("id"), call_function("dot_feats_w", c("feats"), wLit).as("s"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        // reference: the exact HOF fold this expression replaced
+        val want = df.select(c("id"), hofAgg(c("feats"), l(0L),
+            (acc, f) => acc + element_at(wLit, (f.getField("b") + l(1L)).cast("int")) * f.getField("c"))
+            .as("s"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        got shouldBe want
+        // an out-of-range bucket means featurizer/model disagreement — it
+        // must THROW (the old fold's ANSI element_at threw; a silent null
+        // would flip `margin <= 0` rows into quietly-correct ones)
+        val bad = spark.sparkContext.parallelize(Seq((999L, Seq((Perceptron.Buckets + 1L, 3L)))), 1).toDF("id", "feats")
+          .selectExpr("id", "transform(feats, f -> named_struct('b', f._1, 'c', f._2)) AS feats")
+        intercept[Exception] {
+          bad.select(call_function("dot_feats_w", c("feats"), wLit)).collect()
+        }
+      }
     }
   }
 

@@ -3,7 +3,7 @@ package graft.text
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.TestSpark
-import graft.TestSpark.withConf
+import graft.TestSpark.{DifferentialPaths, withConf}
 
 /** Differential tests for the unigram-LM learner: a compact JVM
   * reference implements the SAME quantized algorithm (qlog2 fixed-point
@@ -158,11 +158,7 @@ class UnigramSpec extends AnyFunSuite with Matchers {
     // code both call UnigramSegment.run. The frames are RDD-backed
     // because a projection over a local Seq frame is folded into a
     // LocalRelation by the optimizer, which always interprets it.
-    val paths = Seq(
-      "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
-                           "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
-      "codegen" -> Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"))
-    for ((path, confs) <- paths) withClue(s"$path: ") {
+    for ((path, confs) <- DifferentialPaths) withClue(s"$path: ") {
       withConf(confs: _*) {
         val df = spark.sparkContext.parallelize(rows, 2).toDF("w", "m")
         val got = df

@@ -58,10 +58,7 @@ object GraftFunctions {
 
   private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     fn("kmer_windows", 2) { c => kmer.KmerGenerator(c(0), c.intArg(1, "k")) },
-    // kmer_codes(text, k): (code, word, n) rows — ACGT windows packed
-    // 2 bits a base, other windows as strings; see kmer.KmerCodeGenerator
-    fn("kmer_codes", 2) { c => kmer.KmerCodeGenerator(c(0), c.intArg(1, "k")) },
-    // kmer_decode(code, k): a kmer_codes code back to its ACGT string
+    // kmer_decode(code, k): a packed k-mer code back to its ACGT string
     fn("kmer_decode", 2) { c => kmer.KmerDecode(c(0), c.intArg(1, "k")) },
     fn("ngram_hashes", 3) { c => text.NgramHashGenerator(c(0), c.intArg(1, "minN"), c.intArg(2, "maxN")) },
     // rolling_hashes(text, k[, keepMod]): all k-window hashes, or the

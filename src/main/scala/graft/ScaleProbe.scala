@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** N× scale probe (default 10×; `SPARK_GRAFT_PROBE_COPIES` raises it —
@@ -395,34 +398,27 @@ object ScaleProbe {
     val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val byName = Registry.all.map(q => q.name -> q).toMap
-    // Row counts ride on the TIMED pass via Dataset.observe (a
-    // CollectMetrics node computed during the same execution) — the
-    // superlinearity denominator below re-executes a query only if its
-    // observation is missing.
-    val observed = Observed.install(spark)
-    def cntKey(name: String, dir: String) = s"cnt:$name:$dir"
-    def time(name: String, dir: String): Double = {
+    val measure = new Measure(spark)
+    // The best of two passes after one warm-up, in seconds, with the
+    // query's output row count: an Observation on the query's own frame
+    // counts the rows on the timed pass itself, with no second run.
+    def time(name: String, dir: String): (Double, Long) = {
       val q = byName(name)
       q.setup.foreach { su =>
         try su(spark, dir)
         catch { case e: Throwable => System.err.println(s"[probe] $name setup: ${e.getMessage}") }
         finally GraftSession.releaseStorage(spark)
       }
-      def once(): Double = {
-        val t0 = System.nanoTime()
+      def once(): (Double, Long) = {
+        val rows = Observation()
         try {
-          q.fn(spark, dir)
-            .observe(cntKey(name, dir), count(lit(1)).as("rows"))
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
+          val p = measure.pass(q.fn(spark, dir).observe(rows, count(lit(1)).as("rows")))
+          (p.wallSec, Await.result(rows.future, 60.seconds).getLong(0))
         } finally GraftSession.releaseStorage(spark) // one pass's pins must not distort the next
       }
-      try { once(); math.min(once(), once()) } // warm-up + min-of-2
-      catch { case e: Throwable => System.err.println(s"[probe] $name: ${e.getMessage}"); -1.0 }
+      try { once(); Seq(once(), once()).minBy(_._1) }
+      catch { case e: Throwable => System.err.println(s"[probe] $name: ${e.getMessage}"); (-1.0, -1L) }
     }
-    def observedCount(name: String, dir: String): Double =
-      observed.get(cntKey(name, dir)).map(_.getLong(0).toDouble)
-        .getOrElse(byName(name).fn(spark, dir).count().toDouble)
 
     // Iterative queries record their rounds at probe scale (r10 verdict
     // #4): a probe graph quietly approaching maxIter should be visible
@@ -430,8 +426,8 @@ object ScaleProbe {
     // bigger data.
     val ccIters = scala.collection.mutable.Map[String, Int]()
     val rows = queries.filter(q => only.forall(_.contains(q))).map { n =>
-      val base = time(n, srcDir)
-      val probed = time(n, probeDir)
+      val (base, baseRows) = time(n, srcDir)
+      val (probed, probeRows) = time(n, probeDir)
       if (n == "graph_kcore_nodes") {
         val it = graft.operators.GraphRank.lastKCoreIterations
         ccIters(n) = it
@@ -452,14 +448,13 @@ object ScaleProbe {
       val peakRss = ProcStatus.rssMb("VmHWM")
       val ccJson = ccIters.get(n).map(i => s""","cc_iterations":$i""").getOrElse("")
       println(f"""{"query":"$n","sf01_sec":$base%.2f,"$secKey":$probed%.2f,"ratio":$ratio%.1f,"peak_rss_mb":$peakRss$ccJson}""")
-      (n, ratio)
+      (n, ratio, baseRows, probeRows)
     }
     val flagBase = 2.5 * dataRatio
-    val flagged = rows.filter(_._2 > flagBase).filter { case (n, tRatio) =>
-      val cntBase = observedCount(n, srcDir)
-      val cntProbe = observedCount(n, probeDir)
-      val rowsRatio = if (cntBase > 0) cntProbe / cntBase else 1.0
-      println(f"""{"query":"$n","rows_sf01":${cntBase.toLong},"$rowsKey":${cntProbe.toLong},"rows_ratio":$rowsRatio%.1f,"time_ratio":$tRatio%.1f}""")
+    // A ratio above flagBase means both passes ran, so both counts exist.
+    val flagged = rows.filter(_._2 > flagBase).filter { case (n, tRatio, cntBase, cntProbe) =>
+      val rowsRatio = if (cntBase > 0) cntProbe.toDouble / cntBase else 1.0
+      println(f"""{"query":"$n","rows_sf01":$cntBase,"$rowsKey":$cntProbe,"rows_ratio":$rowsRatio%.1f,"time_ratio":$tRatio%.1f}""")
       tRatio > math.max(flagBase, 2.5 * rowsRatio)
     }.map("\"" + _._1 + "\"").mkString("[", ",", "]")
     val ccJson = ccIters.toSeq.sortBy(_._1)

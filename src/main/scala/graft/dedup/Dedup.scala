@@ -839,14 +839,6 @@ object Dedup {
         explode(expr(s"transform(sequence(1, size(t) - ${n - 1}), i -> concat_ws(' ', slice(t, i, $n)))"))
           .as("gram"))
 
-  /** Distinct word-n-gram shingles per doc. The distinct shuffles the
-    * whole gram stream — callers that filter the stream first (e.g.
-    * decontamination's broadcast holdout join) should use
-    * [[wordNgramsRaw]] and dedupe AFTER the filter.
-    */
-  def wordNgrams(docs: DataFrame, n: Int): DataFrame =
-    wordNgramsRaw(docs, n).distinct()
-
   /** Word-n-gram 64-bit rolling hashes per doc, with multiplicity (no
     * shuffle, no gram STRINGS): [[graft.text.NgramHashGenerator]] does
     * one xxh64 per token plus O(1) prefix arithmetic per window, and

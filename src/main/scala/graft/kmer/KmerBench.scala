@@ -1,6 +1,6 @@
 package graft.kmer
 
-import graft.{GraftSession, Tables}
+import graft.{GraftSession, Measure, Tables}
 
 /** Shuffle-partition sweep of the k-mer count at fixed k — the engine
   * analog of the reference's fixed-N local-size sweep
@@ -23,17 +23,13 @@ object KmerBench {
     // AQE coalescing is OFF for the sweep — it would re-merge small
     // partitions and flatten exactly the curve being measured.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val measure = new Measure(spark)
     for (p <- Seq(1, 2, 4, 8, 16, 32, 64, 128, 256)) {
       spark.conf.set("spark.sql.shuffle.partitions", p)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        Kmers.kmerCounts(docs, "text", 8).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      // warm-up + min-of-2: a single measured pass left a 5x noise spike
-      // in the r8 sweep curve (128 partitions reading 1.53s against
-      // 0.2-0.5s neighbors); the reference's local-size sweep is likewise
-      // multi-run per setting (runprogram.sh:49-73).
+      def once(): Double = measure.pass(Kmers.kmerCounts(docs, "text", 8)).wallSec
+      // warm-up + min-of-2: one measured pass per setting leaves 5x
+      // noise spikes in the curve; the reference's local-size sweep is
+      // likewise multi-run per setting (runprogram.sh:49-73).
       once()
       val sec = math.min(once(), once())
       println(f"""{"metric":"partitions_sweep","partitions":$p,"k":8,"sec":$sec%.3f}""")

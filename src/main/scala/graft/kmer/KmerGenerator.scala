@@ -2,7 +2,7 @@ package graft.kmer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, SpecificInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -84,7 +84,11 @@ case class KmerGenerator(child: Expression, k: Int)
   override def elementSchema: StructType = new StructType().add("word", StringType, nullable = false)
 
   override def checkInputDataTypes(): TypeCheckResult =
-    KmerCodes.checkWindowInput("kmer_windows", child, k)
+    child.dataType match {
+      case _: StringType if k >= 1 && k <= Kmers.MaxK => TypeCheckResult.TypeCheckSuccess
+      case _: StringType => TypeCheckResult.TypeCheckFailure(s"kmer_windows: k must be in [1, ${Kmers.MaxK}], got $k")
+      case other => TypeCheckResult.TypeCheckFailure(s"kmer_windows needs a string column, got $other")
+    }
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
@@ -140,21 +144,13 @@ object KmerCodes {
     while (i >= 0) { out(i) = Letters((c & 3).toInt); c >>>= 2; i -= 1 }
     UTF8String.fromBytes(out)
   }
-
-  /** Type check shared by the window generators. */
-  def checkWindowInput(fn: String, child: Expression, k: Int): TypeCheckResult =
-    child.dataType match {
-      case _: StringType if k >= 1 && k <= Kmers.MaxK => TypeCheckResult.TypeCheckSuccess
-      case _: StringType => TypeCheckResult.TypeCheckFailure(s"$fn: k must be in [1, ${Kmers.MaxK}], got $k")
-      case other => TypeCheckResult.TypeCheckFailure(s"$fn needs a string column, got $other")
-    }
 }
 
 /** The width-k windows of one string, each classified by its content:
   * a window made only of `ACGT` with k <= 32 packs into a code (2 bits a
   * base, [[KmerCodes]]); any other (lowercase, `N`, text, multibyte, or
-  * k > 32) is its string. The one classification kernel of
-  * [[KmerCodesArrayData]] and [[KmerPartitionCounter]].
+  * k > 32) is its string. The classification kernel of
+  * [[KmerPartitionCounter]].
   *
   * An ASCII row keeps a rolling code and the position of the last
   * non-ACGT byte, so in-order access costs O(1) a window; a multibyte
@@ -221,83 +217,12 @@ final class KmerWindowCursor(s: UTF8String, k: Int) {
   }
 }
 
-/** Lazily-evaluated rows `(code, word, n)` for all width-k windows of a
-  * string, the collection behind [[KmerCodeGenerator]]: a window that
-  * packs ([[KmerWindowCursor]]) is `(code, null, 1)`, any other
-  * `(0, window, 1)`, so the key (code, word) depends only on the
-  * window's content. Every element is written into one reused row: the
-  * generated loop reads its fields before it asks for the next element.
-  */
-final class KmerCodesArrayData(s: UTF8String, k: Int) extends ReadOnlyArrayData {
-  private[this] val cursor = new KmerWindowCursor(s, k)
-  private[this] val row = new SpecificInternalRow(Seq(LongType, StringType, LongType))
-
-  override def numElements(): Int = cursor.size
-
-  override def getStruct(p: Int, numFields: Int): InternalRow = {
-    if (cursor.packs(p)) {
-      row.setLong(0, cursor.code)
-      row.setNullAt(1)
-    } else {
-      row.setLong(0, 0L)
-      row.update(1, cursor.window(p))
-    }
-    row.setLong(2, 1L)
-    row
-  }
-
-  override def get(ordinal: Int, dataType: DataType): AnyRef = getStruct(ordinal, 3)
-  override def array: Array[Any] = Array.tabulate[Any](numElements())(getStruct(_, 3).copy())
-}
-
-/** Catalyst Generator `kmer_codes(text, k)`: rows `(code BIGINT, word
-  * STRING, n BIGINT)`, one per width-k window (see
-  * [[KmerCodesArrayData]]), so `groupBy(code, word).sum(n)` counts
-  * every distinct window exactly and [[KmerDecode]] turns a packed key
-  * back into its string. The per-window SQL form of the keys
-  * [[KmerCount]] counts per partition.
-  *
-  * A `CollectionGenerator` with `inline = true`, like the text
-  * generators, so `GenerateExec` runs the loop inside WholeStageCodegen;
-  * the interpreted `eval` walks the same collection.
-  */
-case class KmerCodeGenerator(child: Expression, k: Int)
-    extends UnaryExpression with CollectionGenerator {
-
-  override def prettyName: String = "kmer_codes"
-  override def position: Boolean = false
-  override def inline: Boolean = true
-  override def elementSchema: StructType =
-    new StructType()
-      .add("code", LongType, nullable = false)
-      .add("word", StringType, nullable = true)
-      .add("n", LongType, nullable = false)
-  override def collectionType: DataType = ArrayType(elementSchema, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = KmerCodes.checkWindowInput(prettyName, child, k)
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = child.eval(input)
-    if (v == null) Iterator.empty
-    else {
-      val arr = new KmerCodesArrayData(v.asInstanceOf[UTF8String], k)
-      Iterator.tabulate(arr.numElements())(arr.getStruct(_, 3).copy())
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"new graft.kmer.KmerCodesArrayData($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): KmerCodeGenerator =
-    copy(child = newChild)
-}
-
 /** `kmer_decode(code, k)`: the width-k ACGT string a packed
-  * [[KmerCodeGenerator]] or [[KmerCount]] code stands for; one kernel
-  * ([[KmerCodes.decode]]) on the interpreted and generated paths. It
-  * takes every k the generators take, so [[Kmers.kmerCounts]] is one
-  * plan for all k; above 32 no window packs, and a code reads as
-  * zero-extended (leading `A`s).
+  * [[KmerCount]] code stands for; one kernel ([[KmerCodes.decode]]) on
+  * the interpreted and generated paths. It takes every k the window
+  * generator takes, so [[Kmers.kmerCounts]] is one plan for all k;
+  * above 32 no window packs, and a code reads as zero-extended
+  * (leading `A`s).
   */
 case class KmerDecode(child: Expression, k: Int) extends UnaryExpression {
   override def prettyName: String = "kmer_decode"

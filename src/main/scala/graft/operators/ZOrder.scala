@@ -43,7 +43,6 @@ import graft.{EngineQuery, Tables}
 object ZOrder {
 
   val Bits = 16
-  val NumFiles = 64
 
   /** Morton interleave of the low 16 bits of two BIGINT columns:
     * bit i of x → bit 2i, bit i of y → bit 2i+1. */

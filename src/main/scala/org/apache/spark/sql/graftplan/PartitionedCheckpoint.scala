@@ -16,14 +16,14 @@ import org.apache.spark.storage.StorageLevel
   * components) loses the partitioning it just paid a shuffle for, and
   * each later round re-exchanges the corpus-scale relation it joins.
   *
-  * This helper makes the partitioning survive: it executes
-  * `df.repartition(numPartitions, keys*)` (an explicit user
+  * This helper makes the partitioning survive: the caller's plan ends
+  * in `repartition(numPartitions, keys*)` (an explicit user
   * repartition — AQE does not coalesce it, so rows land exactly by
   * `murmur3(keys) pmod numPartitions`, which is precisely the
-  * [[HashPartitioning]] contract), persists the materialized rows, and
-  * rebuilds the frame as a [[LogicalRDD]] that DECLARES
-  * `HashPartitioning(keys, numPartitions)` over the original output
-  * attributes. Downstream src-keyed joins and aggregations then see a
+  * [[HashPartitioning]] contract); the helper persists the
+  * materialized rows and rebuilds the frame as a [[LogicalRDD]] that
+  * DECLARES `HashPartitioning(keys, numPartitions)` over the original
+  * output attributes. Downstream src-keyed joins and aggregations then see a
   * satisfied distribution and plan no exchange on this side.
   *
   * The declared partitioning is true by construction — same engine,
@@ -33,14 +33,6 @@ import org.apache.spark.storage.StorageLevel
   * blocks once no consumer re-scans the frame.
   */
 object PartitionedCheckpoint {
-
-  /** Materialize `df` hash-partitioned on `keys` into `numPartitions`
-    * local blocks; returns the partitioning-aware frame and a release
-    * handle for the persisted blocks.
-    */
-  def localEagerByKey(df: DataFrame, keys: Seq[String], numPartitions: Int): (DataFrame, () => Unit) =
-    localEagerDeclared(
-      df.repartition(numPartitions, keys.map(df.col): _*), keys, numPartitions)
 
   /** Materialize `df` AS IS and declare `HashPartitioning(keys,
     * numPartitions)` (plus, when `sortedByKeys`, an ascending

@@ -30,7 +30,7 @@ class GraftSessionSpec extends AnyFunSuite with Matchers {
       withClue(s"$q: ") {
         SparkEntry.queries(q)(foreign, dir).collect() should not be empty
       }
-    ids should have size 19
+    ids should have size 18
     ids.filterNot(registry.functionExists) shouldBe empty
     foreign.conf.get(nanosAsLong) shouldBe "true"
   }

@@ -203,18 +203,14 @@ class KmersSpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("kmer_codes rows: packed ACGT windows, string windows otherwise") {
-    val rows = spark.sql("SELECT kmer_codes('ACGTNa', 2)").collect()
-      .map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2))).toSeq
-    rows shouldBe Seq((1L, None, 1L), (6L, None, 1L), (11L, None, 1L),
-      (0L, Some("TN"), 1L), (0L, Some("Na"), 1L))
+  test("kmer_decode restores a packed code's ACGT window") {
     spark.sql("SELECT kmer_decode(11L, 2), kmer_decode(-1L, 32), kmer_decode(0L, 1)").collect()(0).toSeq shouldBe
       Seq("GT", "T" * 32, "A")
   }
 
   // Argument checks: a bad call fails analysis with an error naming the
   // function, for every k-mer builder.
-  private val kmerFns = Seq("kmer_windows", "kmer_codes", "kmer_decode")
+  private val kmerFns = Seq("kmer_windows", "kmer_decode")
   private def argCol(fn: String): String = if (fn == "kmer_decode") "code" else "text"
 
   private def analysisError(sql: String): AnalysisException = {

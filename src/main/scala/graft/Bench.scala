@@ -280,11 +280,14 @@ object Bench {
     // Runs `body` on the pool in job group `group`, bounded by `budget`
     // seconds. A body that fails or outlives its budget has its group
     // cancelled, so no zombie job contends with the passes after it.
+    // The cancel is cooperative: a killed task stops at its next input
+    // record instead of having its thread interrupted, which could land
+    // mid class load and log the loader's ERROR stacks.
     // Storage cleanup follows either way, outside any timed window.
     def bounded[T](group: String, description: String, budget: Int)(body: => T): T = {
       val fut = runPool.submit(new java.util.concurrent.Callable[T] {
         def call(): T = {
-          sc.setJobGroup(group, description, interruptOnCancel = true)
+          sc.setJobGroup(group, description, interruptOnCancel = false)
           try body
           finally sc.clearJobGroup()
         }

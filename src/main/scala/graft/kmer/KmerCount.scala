@@ -1,6 +1,6 @@
 package graft.kmer
 
-import org.apache.spark.rdd.RDD
+import org.apache.spark.rdd.{RDD, UnionRDD}
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BindReferences, Expression, SortOrder}
@@ -72,6 +72,17 @@ object KmerCountStrategy extends SparkStrategy {
 /** The map side of [[KmerCount]]: one [[KmerPartitionCounter]] per
   * partition, so a partition emits each window it holds once per
   * counter flush, with its count.
+  *
+  * When the child has fewer partitions than the session has task slots
+  * (`defaultParallelism`) and k > [[KmerCodes.DenseMaxK]], the map side
+  * reads the union of `S = defaultParallelism / childPartitions` copies
+  * of the child, so each child partition runs as S tasks: slice j (a
+  * partition of copy j) re-reads its parent partition and counts windows
+  * `[size·j/S, size·(j+1)/S)` of each row. Every window is counted by
+  * exactly one slice, and the reduce side's sum stays exact. No shuffle
+  * or stage is added. The dense regime keeps one task per partition,
+  * because each slice would emit up to 4^k rows; a child with at least
+  * as many partitions as slots gives S = 1, the unsliced plan.
   */
 case class KmerCountExec(text: Expression, k: Int, output: Seq[Attribute], child: SparkPlan)
     extends UnaryExecNode {
@@ -82,9 +93,16 @@ case class KmerCountExec(text: Expression, k: Int, output: Seq[Attribute], child
   override protected def doExecute(): RDD[InternalRow] = {
     val numOutputRows = longMetric("numOutputRows")
     val bound = BindReferences.bindReference(text, child.output)
-    child.execute().mapPartitions { rows =>
+    val parent = child.execute()
+    val parts = parent.getNumPartitions
+    val slots = sparkContext.defaultParallelism
+    val slices = if (k > KmerCodes.DenseMaxK && parts > 0 && parts < slots) slots / parts else 1
+    // built directly: `SparkContext.union` would zip copies that share a
+    // partitioner instead of concatenating them
+    val input = if (slices == 1) parent else new UnionRDD(sparkContext, Seq.fill(slices)(parent))
+    input.mapPartitionsWithIndex { (i, rows) =>
       val texts = rows.map(r => bound.eval(r).asInstanceOf[UTF8String]).filter(_ != null)
-      new KmerPartitionCounter(texts, k).map { r => numOutputRows += 1; r }
+      new KmerPartitionCounter(texts, k, slice = i / parts, slices = slices).map { r => numOutputRows += 1; r }
     }
   }
 
@@ -153,15 +171,20 @@ case class KmerSumExec(child: SparkPlan) extends UnaryExecNode {
   *    is counted in a string map of at most `stringCapacity` keys,
   *    emitted and cleared when full and at the end.
   *
-  * Each row's windows are classified by a [[KmerWindowCursor]]. A key
-  * may be emitted more than once (once per flush); the reduce side sums
-  * them.
+  * Each row's windows are classified by a [[KmerWindowCursor]]. Slice
+  * `slice` of `slices` counts only windows `[size·slice/slices,
+  * size·(slice+1)/slices)` of each row of `size` windows; the slices of
+  * a partition together count each of its windows once. A key may be
+  * emitted more than once (once per flush, and once per slice); the
+  * reduce side sums them.
   */
 private[kmer] final class KmerPartitionCounter(
     texts: Iterator[UTF8String],
     k: Int,
     chunkCapacity: Int = KmerPartitionCounter.ChunkCapacity,
-    stringCapacity: Int = KmerPartitionCounter.StringCapacity) extends Iterator[InternalRow] {
+    stringCapacity: Int = KmerPartitionCounter.StringCapacity,
+    slice: Int = 0,
+    slices: Int = 1) extends Iterator[InternalRow] {
   private[this] val dense = k <= KmerCodes.DenseMaxK
 
   private[this] var counts: Array[Int] = null
@@ -170,10 +193,10 @@ private[kmer] final class KmerPartitionCounter(
   private[this] var fill = 0
   private[this] val strings = new java.util.HashMap[UTF8String, Array[Long]]
 
-  // the current row: windows [p, nWin) are still to count
+  // the current row: windows [p, end) of this slice are still to count
   private[this] var cursor: KmerWindowCursor = null
   private[this] var p = 0
-  private[this] var nWin = 0
+  private[this] var end = 0
 
   // pending output: chunk runs (codes in chunk, counts in scratch), then
   // string entries, then, after the last row, the dense table
@@ -200,7 +223,7 @@ private[kmer] final class KmerPartitionCounter(
         counts = null
       }
       if (done) return false
-      if (p < nWin) {
+      if (p < end) {
         scan()
         if (fill == chunkCapacity) flushChunk()
         if (strings.size >= stringCapacity) flushStrings()
@@ -231,15 +254,16 @@ private[kmer] final class KmerPartitionCounter(
 
   private def load(s: UTF8String): Unit = {
     cursor = new KmerWindowCursor(s, k)
-    nWin = cursor.size
-    p = 0
+    val size = cursor.size.toLong
+    p = (size * slice / slices).toInt
+    end = (size * (slice + 1) / slices).toInt
   }
 
-  /** Counts the current row's windows from p on, until the row ends, the
-    * chunk is full or the string map is.
+  /** Counts the current row's windows from p on, until the slice's range
+    * ends, the chunk is full or the string map is.
     */
   private def scan(): Unit =
-    while (p < nWin && fill < chunkCapacity && strings.size < stringCapacity) {
+    while (p < end && fill < chunkCapacity && strings.size < stringCapacity) {
       if (!cursor.packs(p)) addString(cursor.window(p))
       else if (dense) addDense(cursor.code.toInt)
       else addCode(cursor.code)

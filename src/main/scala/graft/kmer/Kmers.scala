@@ -21,7 +21,9 @@ import graft.{EngineQuery, Tables}
   *    in radix-sorted, run-length-encoded `long[]` chunks above; any
   *    other window as its string in a bounded pre-count
   *    ([[KmerPartitionCounter]]); one `(code, word, n)` row per key and
-  *    flush, none per window;
+  *    flush, none per window. Above k = 10, a scan with fewer partitions
+  *    than task slots runs as window-range slices, one task per slot,
+  *    with no shuffle or stage added;
   *  - `Exchange hashpartitioning(code, word)` into
   *    `spark.sql.shuffle.partitions`, by number, so AQE keeps every
   *    reduce task;
@@ -39,8 +41,11 @@ import graft.{EngineQuery, Tables}
   * much radix scratch (64 MB), plus a string map of at most 65,536 keys;
   * its output is at most one row per distinct key and flush, so shuffle
   * volume is bounded by distinct k-mers per partition (per chunk above
-  * k = 10), not corpus size. The reduce side's memory is Spark's
-  * `SortExec`, which spills. No driver-side state.
+  * k = 10), not corpus size. A slice re-reads its parent partition only
+  * while slots would otherwise sit idle: a scan with at least as many
+  * partitions as slots, as at scale, runs one task per partition. The
+  * reduce side's memory is Spark's `SortExec`, which spills. No
+  * driver-side state.
   */
 object Kmers {
   /** Max window width, kept for semantic parity with the reference's
@@ -72,8 +77,9 @@ object Kmers {
     * decided by the window's content alone, so one pass is exact.
     * `kmer_decode` runs in the projection above it — per output row, and
     * after a filter on `cnt` such as [[thresholded]]'s, which Catalyst
-    * places below this projection. No fan-out: the counter emits no row
-    * per window, so the scan's partitions feed it directly.
+    * places below this projection. The counter emits no row per window,
+    * and a scan that leaves task slots idle is split into window-range
+    * slices rather than repartitioned, so no shuffle precedes the count.
     */
   def kmerCounts(df: DataFrame, textCol: String, k: Int): DataFrame = {
     checkK(k)

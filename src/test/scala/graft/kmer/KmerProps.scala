@@ -2,6 +2,7 @@ package graft.kmer
 
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
+import org.apache.spark.unsafe.types.UTF8String
 import graft.TestSpark
 import graft.TestSpark.{DifferentialPaths, withConf}
 
@@ -151,6 +152,24 @@ object KmerProps extends Properties("Kmers") {
         val engine = engineCounts(texts, k)
         val total = texts.map(t => math.max(0, t.codePointCount(0, t.length) - k + 1).toLong).sum
         engine == naiveCounts(texts, k) && engine.values.sum == total
+      }
+    }
+
+  /** The rows slice `slice` of `slices` of one partition counter emits
+    * over `texts`, decoded; a small chunk and string map make it flush
+    * inside a slice.
+    */
+  private def sliceRows(texts: Seq[String], k: Int, slice: Int, slices: Int): Seq[(String, Long)] =
+    new KmerPartitionCounter(texts.iterator.map(UTF8String.fromString), k, 64, 8, slice, slices)
+      .map(r => (if (r.isNullAt(1)) KmerCodes.decode(r.getLong(0), k).toString else r.getUTF8String(1).toString) ->
+        r.getLong(2))
+      .toVector
+
+  property("the counter's window-range slices sum to the sliding-window counts at k in {11, 31, 32, 33}") =
+    forAll(genCounterCorpus, Gen.chooseNum(1, 8)) { (texts, slices) =>
+      Seq(11, 31, 32, 33).forall { k =>
+        val sliced = (0 until slices).flatMap(sliceRows(texts, k, _, slices)).groupMapReduce(_._1)(_._2)(_ + _)
+        sliced == naiveCounts(texts, k)
       }
     }
 }

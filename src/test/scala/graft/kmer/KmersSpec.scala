@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
+import org.apache.spark.graftmetrics.TestScheduler
 import graft.TestSpark
 
 /** Pins the k-mer semantics the reference's verifier checks
@@ -145,9 +146,12 @@ class KmersSpec extends AnyFunSuite with Matchers {
   private def naive(texts: Seq[String], k: Int): Map[String, Long] =
     texts.flatMap(_.sliding(k).filter(_.length == k)).groupBy(identity).view.mapValues(_.size.toLong).toMap
 
-  /** The counter's rows over `texts`, each key's counts summed, decoded. */
-  private def counterTotals(texts: Seq[String], k: Int, chunk: Int, strings: Int): (Int, Map[String, Long]) = {
-    val rows = new KmerPartitionCounter(texts.iterator.map(UTF8String.fromString), k, chunk, strings)
+  /** The counter's rows over `texts` (slice `slice` of `slices`), each
+    * key's counts summed, decoded.
+    */
+  private def counterTotals(texts: Seq[String], k: Int, chunk: Int, strings: Int,
+                            slice: Int = 0, slices: Int = 1): (Int, Map[String, Long]) = {
+    val rows = new KmerPartitionCounter(texts.iterator.map(UTF8String.fromString), k, chunk, strings, slice, slices)
       .map(r => (if (r.isNullAt(1)) KmerCodes.decode(r.getLong(0), k).toString else r.getUTF8String(1).toString,
         r.getLong(2)))
       .toVector
@@ -179,6 +183,50 @@ class KmersSpec extends AnyFunSuite with Matchers {
       flushed shouldBe naive(texts, k)
       // a chunk of 257 codes cannot hold ~9k windows: some keys went out more than once
       if (k > KmerCodes.DenseMaxK) rows should be > flushed.size
+    }
+  }
+
+  test("the counter's window-range slices together count every window once") {
+    val rnd = new scala.util.Random(13)
+    val dna = Seq.fill(3000)("ACGT".charAt(rnd.nextInt(4))).mkString
+    for (k <- Seq(11, 31, 32, 33); slices <- Seq(1, 2, 3, 5, 8)) withClue(s"k=$k, S=$slices: ") {
+      // a multibyte char at the row's first slice boundary, so windows of
+      // two slices cover it
+      val boundary = (dna.length - k + 1) / slices
+      val texts = Seq(
+        dna,
+        dna.take(boundary) + "é" + dna.drop(boundary + 1),
+        dna.take(1200) + "N" + dna.drop(1201) + "acgt",
+        dna.take(k + 2), // 3 windows: fewer than most S
+        dna.take(k - 1),
+        "")
+      val whole = naive(texts, k)
+      // a chunk of 257 codes and a map of 7 strings flush inside each slice
+      val parts = (0 until slices).map(j => counterTotals(texts, k, 257, 7, j, slices))
+      parts.flatMap(_._2).groupMapReduce(_._1)(_._2)(_ + _) shouldBe whole
+      parts.head._1 should be > parts.head._2.size
+    }
+  }
+
+  test("the map side runs a task per slot when the child leaves slots idle, above the dense regime") {
+    val slots = spark.sparkContext.defaultParallelism
+    val rnd = new scala.util.Random(17)
+    val texts = Seq.fill(3)(Seq.fill(500)("ACGT".charAt(rnd.nextInt(4))).mkString) :+ "ACGTNACGTé" * 8
+    def mapTasks(parts: Int, k: Int): Int = TestScheduler.mapTasks(spark.sparkContext) {
+      val df = Kmers.kmerCounts(spark.sparkContext.parallelize(texts, parts).toDF("text"), "text", k)
+      df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe naive(texts, k)
+    }
+    slots should be > 1
+    mapTasks(1, 31) shouldBe slots
+    mapTasks(1, 11) shouldBe slots
+    mapTasks(1, 8) shouldBe 1
+    mapTasks(slots, 31) shouldBe slots
+    mapTasks(slots + 1, 31) shouldBe slots + 1
+    // several child partitions, each cut into slots / parts slices
+    TestScheduler.withDefaultParallelism(spark.sparkContext, 8) {
+      mapTasks(2, 31) shouldBe 8
+      mapTasks(3, 31) shouldBe 6
+      mapTasks(2, 8) shouldBe 2
     }
   }
 

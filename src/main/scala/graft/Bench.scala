@@ -25,11 +25,9 @@ import org.apache.spark.sql.SparkSession
   *  - a JVM shutdown hook prints the final line with whatever has been
   *    measured so far, so an external SIGTERM (the host's kill timer)
   *    still yields a parsable artifact;
-  *  - per-query wall budget: a pathological query has its job group
-  *    cancelled, records sentinel -1, and the run moves on;
-  *  - post-cancel storage cleanup runs on the worker pool with its own
-  *    15s bound — a cancelled stage draining tasks must never block
-  *    the main loop;
+  *  - per-query wall budget: a pathological pass has its job group
+  *    and that group's future jobs cancelled by [[Measure]], records
+  *    sentinel -1, and the run moves on;
   *  - global deadline (default 540s, well under the host kill timer)
   *    after which remaining work records -1 without running; warm-up
   *    is INTERLEAVED per query (warm → measure → snapshot), capped at
@@ -242,91 +240,26 @@ object Bench {
 
     // Per-query wall budget: a pass that exceeds it has its Spark jobs
     // cancelled and records the sentinel -1 like any other failure; the
-    // run moves on and the final line still prints. A query can carry
-    // its own budget through the overrides env:
-    //   SPARK_GRAFT_BENCH_BUDGET_OVERRIDES="curated_corpus=180,foo=30"
-    // curated_corpus (quality gate + the full MinHash→CC dedup pipeline)
-    // gets 120s by default: headroom on a stalled host that still
-    // catches an order-of-magnitude regression.
+    // run moves on and the final line still prints. curated_corpus
+    // (quality gate + the full MinHash→CC dedup pipeline) gets 120s:
+    // headroom on a stalled host that still catches an
+    // order-of-magnitude regression.
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "90").toInt
-    val budgetOverrides: Map[String, Int] =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_OVERRIDES", "curated_corpus=120")
-        .split(",").map(_.trim).filter(_.contains("="))
-        .map { kv => val Array(k, v) = kv.split("=", 2); k -> v.trim.toInt }.toMap
+    val budgetOverrides = Map("curated_corpus" -> 120)
     def budgetFor(q: EngineQuery): Int = budgetOverrides.getOrElse(q.name, budgetSec)
-    // Cached pool (not single-thread): a cancelled-but-wedged pass must
-    // not block the next query's submission behind it.
-    val runPool = java.util.concurrent.Executors.newCachedThreadPool(new java.util.concurrent.ThreadFactory {
-      def newThread(r: Runnable): Thread = { val t = new Thread(r, "bench-query"); t.setDaemon(true); t }
-    })
-    // Leave no storage residue between queries: cached frames and
-    // checkpoint blocks a query failed to release would crowd the
-    // storage pool of every later query. Runs on the pool with its own
-    // 15s bound, because clearing the cache can block behind a
-    // cancelled stage's draining tasks, and that must never keep the
-    // main loop from its next deadline check.
-    def cleanupStorage(): Unit = {
-      val f = runPool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = GraftSession.releaseStorage(spark)
-      })
-      try f.get(15, java.util.concurrent.TimeUnit.SECONDS)
-      catch {
-        case _: Throwable =>
-          f.cancel(true)
-          System.err.println("[bench] storage cleanup exceeded 15s; continuing without it")
-      }
-    }
-    val sc = spark.sparkContext
-    // Runs `body` on the pool in job group `group`, bounded by `budget`
-    // seconds. A body that fails or outlives its budget has its group
-    // cancelled, so no zombie job contends with the passes after it.
-    // The cancel is cooperative: a killed task stops at its next input
-    // record instead of having its thread interrupted, which could land
-    // mid class load and log the loader's ERROR stacks.
-    // Storage cleanup follows either way, outside any timed window.
-    def bounded[T](group: String, description: String, budget: Int)(body: => T): T = {
-      val fut = runPool.submit(new java.util.concurrent.Callable[T] {
-        def call(): T = {
-          sc.setJobGroup(group, description, interruptOnCancel = false)
-          try body
-          finally sc.clearJobGroup()
-        }
-      })
-      try fut.get(budget, java.util.concurrent.TimeUnit.SECONDS)
-      catch {
-        case e: Throwable =>
-          sc.cancelJobGroup(group)
-          fut.cancel(true)
-          throw (e match {
-            case _: java.util.concurrent.TimeoutException => new RuntimeException(s"exceeded ${budget}s wall budget")
-            case x: java.util.concurrent.ExecutionException => x.getCause
-            case _ => e
-          })
-      } finally cleanupStorage()
-    }
-
     val measure = new Measure(spark)
-    def runOnce(q: EngineQuery, budgetCap: Option[Int] = None): Measure.Pass = {
-      val budget = budgetCap.fold(budgetFor(q))(math.min(_, budgetFor(q)))
-      bounded(s"bench-${q.name}", q.name, budget)(measure.pass(q.fn(spark, sfDir)))
-    }
-
     // Untimed setup half: `*_from_saved` queries train and persist here,
     // outside every timed window, so the measured passes are reload and
     // apply alone. On failure the query self-heals: it trains inside its
     // first pass (a worse reading, never a wedge).
     def runSetup(q: EngineQuery): Unit = q.setup.foreach { su =>
-      try bounded(s"bench-setup-${q.name}", s"${q.name} setup", budgetFor(q))(su(spark, sfDir))
+      try measure.run(Some(budgetFor(q)))(su(spark, sfDir))
       catch {
         case e: Throwable =>
           System.err.println(s"[bench] ${q.name} setup failed: ${e.getMessage} (query will self-heal)")
       }
     }
 
-    // Min of N measured passes after one discarded warm-up. Driver-safe
-    // default is ONE measured pass: the official artifact must fit the
-    // host kill timer; local/judge runs can raise it for min-of-N.
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "1").toInt.max(1)
     // Global deadline backstop, defaulting WELL under the driver's
     // process-level kill timer: past the deadline, remaining work
     // records the -1 sentinel WITHOUT running, so the final JSON line
@@ -348,11 +281,11 @@ object Bench {
           System.err.println(s"[bench] ${q.name} skipped: past ${deadlineSec}s bench deadline")
           Measure.failed(Measure.NoMetrics)
         } else
-          try runOnce(q)
+          try measure.pass(q.fn(spark, sfDir), Some(budgetFor(q)))
           catch {
-            case e: Throwable =>
+            case e: Measure.PassFailed =>
               System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
-              Measure.failed(measure.latestMetrics)
+              e.pass
           }
       passMetrics.merge(q.name, Seq((pass, load)),
         (olds: Seq[(Measure.Pass, Double)], news: Seq[(Measure.Pass, Double)]) => olds ++ news)
@@ -370,18 +303,19 @@ object Bench {
     // warm-up must cost 30s, never the full per-query budget — the
     // worst case per query drops from 2× budget to budget + 30s, and
     // the measured pass (simply colder) still produces a number.
-    val warmupCapSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP_CAP_SEC", "30").toInt
+    val warmupCapSec = 30
     headline.foreach { q =>
       if (!pastDeadline) runSetup(q)
       if (elapsedSec < deadlineSec * 0.6 && !pastDeadline)
-        try runOnce(q, budgetCap = Some(warmupCapSec)) catch { case _: Throwable => () }
-      val runs = (1 to passes).map(_ => measuredPass(q))
-      val ok = runs.map(_._1).filter(_ >= 0)
-      val best = if (ok.nonEmpty) ok.min else runs.head._1
+        try measure.pass(q.fn(spark, sfDir), Some(math.min(warmupCapSec, budgetFor(q))))
+        catch { case _: Measure.PassFailed => () }
+      // The first sweep is ONE measured pass per query (-1 if it
+      // failed): the official artifact must fit the host kill timer.
+      val run = measuredPass(q)
       // Publish as soon as this query finishes: a kill mid-bench still
       // reports every completed query via the shutdown hook.
-      bestSec.put(q.name, best)
-      allRuns.put(q.name, runs)
+      bestSec.put(q.name, run._1)
+      allRuns.put(q.name, Seq(run))
       // Progressive snapshot: a compact but COMPLETE artifact line after
       // every query. The shutdown hook covers a direct SIGTERM, but the
       // sbt pipe between the forked JVM and the driver's tail capture
@@ -428,7 +362,7 @@ object Bench {
       val fails = runs.count(_._1 < 0)
       if (fails > 0) failCount.put(q.name, fails)
     }
-    var extraPass = passes
+    var extraPass = 1
     var exhausted = false
     while (extraPass < maxPasses && !exhausted && !pastDeadline) {
       // Cheapest-first by best-so-far; never-measured and failed-so-far
@@ -454,8 +388,8 @@ object Bench {
           // reading (the documented host swing).
           val estSec = if (b > 0) b * 3 else budgetFor(q).toDouble
           if (elapsedSec + estSec + 5 < deadlineSec * 0.85) {
-            // measuredPass, not bare runOnce: re-runs carry stage metrics
-            // too, so every entry of the runs map has a per-pass record.
+            // measuredPass: re-runs carry stage metrics too, so every
+            // entry of the runs map has a per-pass record.
             val (sec, load) = measuredPass(q)
             attempted = true
             allRuns.merge(q.name, Seq((sec, load)),
@@ -517,7 +451,7 @@ object Bench {
     }
     runCompleted.set(true)
     emitFinal()
-    // Graceful stop, bounded: a hung executor/cleanup thread must not
+    // Graceful stop, bounded: a hung executor thread must not
     // turn a finished bench into rc=124. halt() skips shutdown hooks —
     // the final line is already printed and flushed above.
     Runtime.getRuntime.removeShutdownHook(finalHook)

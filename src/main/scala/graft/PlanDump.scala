@@ -14,7 +14,7 @@ import java.nio.file.{Files, Paths}
   *
   * usage: runMain graft.PlanDump <outDir> <suffix> <name>[,<name>...]
   *   env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *        SPARK_GRAFT_CPUS (default 32)
+  *        SPARK_GRAFT_CPUS (default 4, as for Bench)
   * writes <outDir>/<name>_<suffix>.txt per query.
   */
 object PlanDump {
@@ -22,7 +22,7 @@ object PlanDump {
     val Array(outDir, suffix, namesCsv) = args.take(3)
     val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     Files.createDirectories(Paths.get(outDir))
     val byName = Registry.all.map(q => q.name -> q).toMap
     names.foreach { name =>

@@ -301,6 +301,21 @@ object ScaleProbe {
     "mixture_doremi_apply", "sample_quality_weighted",
     "export_training_shards")
 
+  /** Copy `i` of a documents frame, as both probes materialize it:
+    * doc_id shifted by i·10^9, and the text rotated left by
+    * `(i*37)%997+1` characters (kept as is when not longer than that).
+    */
+  private[graft] def rotatedCopy(docs: DataFrame, i: Int): DataFrame = {
+    val rot = (i * 37) % 997 + 1
+    docs.select(
+      (col("doc_id") + lit(i.toLong * 1000000000L)).as("doc_id"),
+      col("lang"), col("source"),
+      when(length(col("text")) > rot,
+        concat(col("text").substr(lit(rot + 1), length(col("text"))), col("text").substr(1, rot)))
+        .otherwise(col("text")).as("text"),
+      col("n_chars"))
+  }
+
   def materialize(spark: SparkSession, srcDir: String, outDir: String, copies: Int): Unit = {
     val done = new java.io.File(outDir, "_PROBE_READY")
     if (done.exists()) return
@@ -310,16 +325,7 @@ object ScaleProbe {
       (0 until copies).map(i => f(base, i)).reduce(_ unionByName _)
 
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")
-    union10(docs) { (d, i) =>
-      val rot = (i * 37) % 997 + 1
-      d.select(
-        (col("doc_id") + lit(i.toLong * 1000000000L)).as("doc_id"),
-        col("lang"), col("source"),
-        when(length(col("text")) > rot,
-          concat(col("text").substr(lit(rot + 1), length(col("text"))), col("text").substr(1, rot)))
-          .otherwise(col("text")).as("text"),
-        col("n_chars"))
-    }.repartition(32).write.mode(SaveMode.Overwrite).parquet(s"$outDir/documents.parquet")
+    union10(docs)(rotatedCopy).repartition(32).write.mode(SaveMode.Overwrite).parquet(s"$outDir/documents.parquet")
 
     // events.ts arrives as INT64 nanos or a plain timestamp depending on
     // harness data vintage (Tables.normalizeEventsTs doc). Normalize to
@@ -405,16 +411,13 @@ object ScaleProbe {
     def time(name: String, dir: String): (Double, Long) = {
       val q = byName(name)
       q.setup.foreach { su =>
-        try su(spark, dir)
+        try measure.run(None)(su(spark, dir))
         catch { case e: Throwable => System.err.println(s"[probe] $name setup: ${e.getMessage}") }
-        finally GraftSession.releaseStorage(spark)
       }
       def once(): (Double, Long) = {
         val rows = Observation()
-        try {
-          val p = measure.pass(q.fn(spark, dir).observe(rows, count(lit(1)).as("rows")))
-          (p.wallSec, Await.result(rows.future, 60.seconds).getLong(0))
-        } finally GraftSession.releaseStorage(spark) // one pass's pins must not distort the next
+        val p = measure.pass(q.fn(spark, dir).observe(rows, count(lit(1)).as("rows")))
+        (p.wallSec, Await.result(rows.future, 60.seconds).getLong(0))
       }
       try { once(); Seq(once(), once()).minBy(_._1) }
       catch { case e: Throwable => System.err.println(s"[probe] $name: ${e.getMessage}"); (-1.0, -1L) }
@@ -525,16 +528,7 @@ object SkewProbe {
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")
     val hot = docs.agg(min("source")).collect()(0).getString(0)
     val hotDocs = docs.where(col("source") === hot)
-    val scaled = (0 until hotCopies).map { i =>
-      val rot = (i * 37) % 997 + 1
-      hotDocs.select(
-        (col("doc_id") + lit(i.toLong * 1000000000L)).as("doc_id"),
-        col("lang"), col("source"),
-        when(length(col("text")) > rot,
-          concat(col("text").substr(lit(rot + 1), length(col("text"))), col("text").substr(1, rot)))
-          .otherwise(col("text")).as("text"),
-        col("n_chars"))
-    }.reduce(_ unionByName _)
+    val scaled = (0 until hotCopies).map(ScaleProbe.rotatedCopy(hotDocs, _)).reduce(_ unionByName _)
     docs.where(col("source") =!= hot).unionByName(scaled)
       .repartition(32).write.mode(SaveMode.Overwrite).parquet(s"$outDir/documents.parquet")
     for (t <- Seq("region", "nation", "customer", "supplier", "part",

@@ -29,8 +29,8 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally {
-        // Bench-style storage hygiene (Bench.scala does the same between
-        // queries): queries that pin a relation for the caller's action
+        // Storage hygiene (graft.Measure does the same after every
+        // pass): queries that pin a relation for the caller's action
         // (winnow seed join, phash signatures, …) leave it persisted by
         // convention — across a 322-query run those by-convention pins
         // would otherwise accumulate in the block manager.

@@ -42,12 +42,13 @@ final class PassListener extends SparkListener {
   @volatile private var window = new Window(-1)
 
   /** Starts a new pass: jobs `sc` submits from this thread from now on
-    * belong to it.
+    * belong to it. Returns the pass's generation.
     */
-  def nextPass(sc: SparkContext): Unit = {
+  def nextPass(sc: SparkContext): Int = {
     val g = generations.incrementAndGet()
     window = new Window(g)
     sc.setLocalProperty(GenerationKey, g.toString)
+    g
   }
 
   /** (job id, wall ns) of the current pass's finished jobs, by job id. */

@@ -308,7 +308,9 @@ object Bench {
       if (!pastDeadline) runSetup(q)
       if (elapsedSec < deadlineSec * 0.6 && !pastDeadline)
         try measure.pass(q.fn(spark, sfDir), Some(math.min(warmupCapSec, budgetFor(q))))
-        catch { case _: Measure.PassFailed => () }
+        catch {
+          case e: Measure.PassFailed => System.err.println(s"[bench] ${q.name} warm-up failed: ${e.getMessage}")
+        }
       // The first sweep is ONE measured pass per query (-1 if it
       // failed): the official artifact must fit the host kill timer.
       val run = measuredPass(q)

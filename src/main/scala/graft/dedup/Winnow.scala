@@ -164,58 +164,6 @@ object Winnow {
     * bounded by the matched span. The one new wide op is the per-pair
     * argmax, an aggregation at pair cardinality.
     */
-  /** Block width of the two-level extension scan. */
-  private val ExtBlock = 16
-
-  /** ta/tb char position of 1-based extension offset `o`, leftward from
-    * the window start (dir < 0) or rightward from the window end.
-    */
-  private def extPos(side: Char, dir: Int, o: String): String =
-    if (dir > 0) s"pos_$side + ${K - 1} + ($o)" else s"pos_$side - ($o)"
-
-  /** Two-level idle-out extension: the block fold compares
-    * [[ExtBlock]]-char chunks (packed acc = 2·matchedBlocks + stopbit),
-    * emitted as its own column so it evaluates ONCE; [[extRefine]]
-    * then scans ≤ ExtBlock chars inside the first mismatching block.
-    * 16× fewer fold steps than char-at-a-time — the substring equality
-    * short-circuits on the first differing byte anyway.
-    *
-    * No longer on the hot path (r20: [[longestDupSubstrings]] runs the
-    * codegen'd `common_run_len` instead); kept with [[extRefine]] as
-    * WinnowSpec's differential reference.
-    */
-  private[dedup] def extBlocks(dir: Int, bound: String): String = {
-    val bw = ExtBlock
-    val len = s"least($bw, $bound - (j - 1) * $bw)"
-    def block(side: Char) =
-      if (dir > 0) s"substring(t$side, ${extPos(side, dir, s"(j - 1) * $bw + 1")}, $len)"
-      else s"substring(t$side, ${extPos(side, dir, s"(j - 1) * $bw + $len")}, $len)"
-    s"""IF($bound < 1, CAST(1 AS BIGINT),
-       |  aggregate(sequence(1, ($bound + ${bw - 1}) div $bw), CAST(0 AS BIGINT),
-       |    (acc, j) -> CASE WHEN acc % 2 = 1 THEN acc
-       |      WHEN ${block('a')} <> ${block('b')} THEN acc + 1
-       |      ELSE CAST(j AS BIGINT) * 2 END))""".stripMargin
-  }
-
-  /** Final extension length from the block-fold column `blkCol`: every
-    * block matched (even acc) → the full bound; else matched blocks
-    * plus a ≤ ExtBlock char-at-a-time refine inside the stopped block.
-    * Spec-reference twin of [[extBlocks]] (see its r20 note).
-    */
-  private[dedup] def extRefine(dir: Int, bound: String, blkCol: String): String = {
-    val bw = ExtBlock
-    val base = s"(($blkCol div 2) * $bw)"
-    s"""CASE WHEN $bound < 1 THEN CAST(0 AS BIGINT)
-       |  WHEN $blkCol % 2 = 0 THEN CAST($bound AS BIGINT)
-       |  ELSE $base + aggregate(
-       |    sequence(1, least($bw, $bound - $base)), CAST(0 AS BIGINT),
-       |    (acc, i) -> CASE WHEN acc % 2 = 1 THEN acc
-       |      WHEN substring(ta, ${extPos('a', dir, s"$base + i")}, 1)
-       |        <> substring(tb, ${extPos('b', dir, s"$base + i")}, 1) THEN acc + 1
-       |      ELSE CAST(i AS BIGINT) * 2 END) div 2
-       |END""".stripMargin
-  }
-
   def longestDupSubstrings(docs: DataFrame): DataFrame = {
     val parts = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     // ONE rolling-hash extraction pass, pinned with its declared h
@@ -258,8 +206,8 @@ object Winnow {
       .withColumn("rmax",
         least(col("la") - col("pos_a"), col("lb") - col("pos_b")) - (K - 1))
       // r20 optimization round: the extension used to be the two-level
-      // interpreted fold pair ([[extBlocks]] + [[extRefine]], kept below
-      // as the differential spec's reference) — every fold step re-ran
+      // interpreted fold pair (now WinnowSpec's differential
+      // reference) — every fold step re-ran
       // substring(), which walks from char 0 to find its byte offset.
       // common_run_len walks each string to its anchor ONCE and steps
       // code point by code point inside WholeStageCodegen; identical

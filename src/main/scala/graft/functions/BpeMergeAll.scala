@@ -14,11 +14,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * discipline).
   *
   * Replaces chains of the `aggregate()` higher-order merge fold
-  * (`applyMerge`, kept in [[graft.text.Bpe]] as the differential spec's
-  * reference): each fold step rebuilt the accumulator with
-  * `concat(slice(acc, …), …)` — O(|syms|²) array copies per merge per
-  * word, interpreted per element, and the learner/from-saved/curve
-  * paths chain up to numMerges folds per projection. Here each merge is
+  * (`applyMerge`, now `BpeSpec`'s differential reference): each fold
+  * step rebuilt the accumulator with `concat(slice(acc, …), …)` —
+  * O(|syms|²) array copies per merge per word, interpreted per
+  * element, and the learner/from-saved/curve paths chain up to
+  * numMerges folds per projection. Here each merge is
   * one in-place O(|syms|) pass (the write index trails the read index),
   * with a single output allocation per row.
   *
@@ -55,11 +55,7 @@ case class BpeMergeAll(first: Expression, second: Expression, third: Expression)
       s.asInstanceOf[ArrayData], a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, a, b) => {
-      s"""
-         |${ev.value} = graft.functions.BpeMergeAll.run($s, $a, $b);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (s, a, b) => s"graft.functions.BpeMergeAll.run($s, $a, $b)")
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): BpeMergeAll =

@@ -14,8 +14,9 @@ import org.apache.spark.sql.types._
   * (`aggregate(feats, 0L, (acc, f) -> acc + element_at(w, f.b + 1) * f.c)`):
   * higher-order-function lambdas evaluate through the interpreter per
   * element, and the learner re-runs that fold over every document's
-  * feature array in EVERY round — this compiles to a tight primitive
-  * loop inside WholeStageCodegen (the [[DotI64]] discipline).
+  * feature array in EVERY round. Here the loop is one static kernel,
+  * `DotFeatsW.run`, that both the interpreted path and the generated
+  * code inside WholeStageCodegen call (the [[DotI64]] discipline).
   *
   * Semantics match the HOF exactly on the learner's domain: `f.b` is a
   * 0-based bucket (the fold's 1-based `element_at(w, f.b + 1)` reads
@@ -50,9 +51,20 @@ case class DotFeatsW(left: Expression, right: Expression) extends BinaryExpressi
   override def dataType: DataType = LongType
   override def prettyName: String = "dot_feats_w"
 
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val fs = l.asInstanceOf[ArrayData]
-    val w = r.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(l: Any, r: Any): Any =
+    DotFeatsW.run(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (fs, w) => s"graft.functions.DotFeatsW.run($fs, $w)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DotFeatsW =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotFeatsW {
+
+  /** Σ w[f.b] · f.c over the (bucket, count) structs of `fs`. */
+  def run(fs: ArrayData, w: ArrayData): Long = {
     val n = fs.numElements()
     val wn = w.numElements()
     var i = 0
@@ -68,32 +80,4 @@ case class DotFeatsW(left: Expression, right: Expression) extends BinaryExpressi
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (fs, w) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val wn = ctx.freshName("wn")
-      val s = ctx.freshName("s")
-      val f = ctx.freshName("f")
-      val b = ctx.freshName("b")
-      s"""
-         |int $n = $fs.numElements();
-         |int $wn = $w.numElements();
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  InternalRow $f = $fs.getStruct($i, 2);
-         |  long $b = $f.getLong(0);
-         |  if ($b < 0 || $b >= $wn) {
-         |    throw new ArrayIndexOutOfBoundsException(
-         |      "dot_feats_w: bucket " + $b + " out of range for " + $wn + " weights");
-         |  }
-         |  $s += $w.getLong((int) $b) * $f.getLong(1);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DotFeatsW =
-    copy(left = newLeft, right = newRight)
 }

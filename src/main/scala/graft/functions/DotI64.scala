@@ -12,8 +12,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * higher-order-function chain in the vector hot paths (cosine scoring,
   * norms, hyperplane sign bits): HOF lambdas evaluate through the
   * interpreter per element and materialize the zipped intermediate
-  * array, while this compiles to a tight primitive loop inside
-  * WholeStageCodegen with no intermediate allocation.
+  * array. Here the loop is one static kernel, `DotI64.run`: the
+  * interpreted path calls it, and so does the generated code inside
+  * WholeStageCodegen, with no intermediate allocation.
   *
   * Precondition: non-null elements (quantized embeddings and plane
   * literals never carry nulls); length mismatch folds over the shorter
@@ -29,31 +30,24 @@ case class DotI64(left: Expression, right: Expression) extends BinaryExpression 
   override def dataType: DataType = LongType
   override def prettyName: String = "dot_i64"
 
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(l: Any, r: Any): Any =
+    DotI64.run(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.DotI64.run($a, $b)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DotI64 =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotI64 {
+
+  /** The dot product over the shorter prefix of `a` and `b`. */
+  def run(a: ArrayData, b: ArrayData): Long = {
     val n = math.min(a.numElements(), b.numElements())
     var i = 0
     var s = 0L
     while (i < n) { s += a.getLong(i) * b.getLong(i); i += 1 }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getLong($i) * $b.getLong($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DotI64 =
-    copy(left = newLeft, right = newRight)
 }

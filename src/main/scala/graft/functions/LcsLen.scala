@@ -10,9 +10,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * token columns — the ROUGE-L core (Lin 2004). Third custom scalar
   * expression after [[DotI64]] and [[NfcNormalize]], same rationale: the
   * two-row DP is a tight primitive loop (O(n·m) int ops over two
-  * reusable int rows) inside WholeStageCodegen, where any
-  * higher-order-function formulation would interpret per element and
-  * allocate a fresh row array per step.
+  * reusable int rows), where any higher-order-function formulation
+  * would interpret per element and allocate a fresh row array per
+  * step. The loop is one static kernel, `LcsLen.run`, that both the
+  * interpreted path and the generated code inside WholeStageCodegen
+  * call.
   *
   * Subsequence, not substring — insertions/deletions/reorders reduce
   * the score gracefully, which is exactly what generation eval needs
@@ -38,13 +40,26 @@ case class LcsLen(left: Expression, right: Expression) extends BinaryExpression 
   override def dataType: DataType = LongType
   override def prettyName: String = "lcs_len"
 
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(l: Any, r: Any): Any =
+    LcsLen.run(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.LcsLen.run($a, $b)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): LcsLen =
+    copy(left = newLeft, right = newRight)
+}
+
+object LcsLen {
+
+  /** The LCS length of `a` and `b` by the two-row DP: `prev` holds row
+    * i − 1, `cur` row i, and the two swap after each row.
+    */
+  def run(a: ArrayData, b: ArrayData): Long = {
     val n = a.numElements()
     val m = b.numElements()
-    val prev = new Array[Int](m + 1)
-    val cur = new Array[Int](m + 1)
+    var prev = new Array[Int](m + 1)
+    var cur = new Array[Int](m + 1)
     var i = 0
     while (i < n) {
       val ai = a.getUTF8String(i)
@@ -56,44 +71,9 @@ case class LcsLen(left: Expression, right: Expression) extends BinaryExpression 
           else math.max(prev(j + 1), cur(j))
         j += 1
       }
-      System.arraycopy(cur, 0, prev, 0, m + 1)
+      val tmp = prev; prev = cur; cur = tmp
       i += 1
     }
     prev(m).toLong
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val prev = ctx.freshName("prev")
-      val cur = ctx.freshName("cur")
-      val tmp = ctx.freshName("tmp")
-      val ai = ctx.freshName("ai")
-      val bj = ctx.freshName("bj")
-      val v = ctx.freshName("v")
-      s"""
-         |int $n = $a.numElements();
-         |int $m = $b.numElements();
-         |int[] $prev = new int[$m + 1];
-         |int[] $cur = new int[$m + 1];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  org.apache.spark.unsafe.types.UTF8String $ai = $a.getUTF8String($i);
-         |  for (int $j = 0; $j < $m; $j++) {
-         |    int $v;
-         |    org.apache.spark.unsafe.types.UTF8String $bj = $b.getUTF8String($j);
-         |    if ($ai != null && $bj != null && $ai.equals($bj)) { $v = $prev[$j] + 1; }
-         |    else { $v = $prev[$j + 1] > $cur[$j] ? $prev[$j + 1] : $cur[$j]; }
-         |    $cur[$j + 1] = $v;
-         |  }
-         |  int[] $tmp = $prev; $prev = $cur; $cur = $tmp;
-         |}
-         |${ev.value} = (long) $prev[$m];
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): LcsLen =
-    copy(left = newLeft, right = newRight)
 }

@@ -10,6 +10,14 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 abstract class ReadOnlyArrayData extends ArrayData {
   override def isNullAt(i: Int): Boolean = false
+
+  /** The elements as struct rows of `numFields` fields, in order: a
+    * generator's interpreted `eval` over the collection its generated
+    * code builds.
+    */
+  final def structRows(numFields: Int): Iterator[InternalRow] =
+    Iterator.tabulate(numElements())(getStruct(_, numFields))
+
   override def copy(): ArrayData = new GenericArrayData(array)
 
   private def unsupported(): Nothing =

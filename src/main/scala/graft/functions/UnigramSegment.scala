@@ -68,11 +68,7 @@ case class UnigramSegment(left: Expression, right: Expression, maxPiece: Int)
     UnigramSegment.run(l.asInstanceOf[UTF8String], r.asInstanceOf[MapData], maxPiece)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (w, m) => {
-      s"""
-         |${ev.value} = graft.functions.UnigramSegment.run($w, $m, $maxPiece);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (w, m) => s"graft.functions.UnigramSegment.run($w, $m, $maxPiece)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): UnigramSegment =

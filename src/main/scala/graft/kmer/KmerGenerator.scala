@@ -56,6 +56,16 @@ final class KmerWindowsArrayData(s: UTF8String, k: Int) extends ReadOnlyArrayDat
     Array.tabulate[Any](n)(i => getUTF8String(i).clone())
 }
 
+object KmerWindowsArrayData {
+  /** The windows of one `kmer_windows` call on either path; a null
+    * string has none. Generated code needs the null case here: a
+    * generator is never nullable, so Spark's generated null check
+    * around the call is omitted.
+    */
+  def of(s: UTF8String, k: Int): KmerWindowsArrayData =
+    new KmerWindowsArrayData(if (s == null) UTF8String.EMPTY_UTF8 else s, k)
+}
+
 /** Catalyst Generator emitting all width-k windows of a string — the
   * direct analog of the reference's Map kernel (one work-item per
   * character position, reference `src/GPU_Module/GPU.cpp:32-45`).
@@ -91,16 +101,12 @@ case class KmerGenerator(child: Expression, k: Int)
     }
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = child.eval(input)
-    if (v == null) Iterator.empty
-    else {
-      val arr = new KmerWindowsArrayData(v.asInstanceOf[UTF8String], k)
-      Iterator.tabulate(arr.numElements())(i => InternalRow(arr.getUTF8String(i)))
-    }
+    val arr = KmerWindowsArrayData.of(child.eval(input).asInstanceOf[UTF8String], k)
+    Iterator.tabulate(arr.numElements())(i => InternalRow(arr.getUTF8String(i)))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"new graft.kmer.KmerWindowsArrayData($c, $k)")
+    defineCodeGen(ctx, ev, c => s"graft.kmer.KmerWindowsArrayData.of($c, $k)")
 
   override protected def withNewChildInternal(newChild: Expression): KmerGenerator =
     copy(child = newChild)

@@ -149,13 +149,13 @@ object AhoCorasick {
     patterns.mkString("|")
   }
 
-  /** Static entry the generated code calls: rows (pid, pos). Null
-    * text yields zero rows here rather than relying on the caller's
-    * null branch — GenerateExec's collection codegen evaluates the
-    * call before its null check.
+  /** Static entry both paths call: rows (pid, pos). A null text or
+    * spec yields zero rows here rather than relying on the caller's
+    * null branch — a generator is never nullable, so its generated
+    * call is not null-guarded.
     */
   def matchRows(text: UTF8String, patsSpec: UTF8String): ACMatchRows = {
-    if (text == null) return new ACMatchRows(Array.emptyIntArray, Array.emptyIntArray)
+    if (text == null || patsSpec == null) return new ACMatchRows(Array.emptyIntArray, Array.emptyIntArray)
     val (pids, poss) = automaton(patsSpec.toString)
       .matchAll(text.toString.codePoints().toArray)
     new ACMatchRows(pids, poss)
@@ -198,22 +198,9 @@ case class AhoCorasickGenerator(left: Expression, right: Expression)
           "ac_matches needs (string column, foldable string pattern spec)")
     }
 
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val t = left.eval(input)
-    val p = right.eval(input)
-    if (t == null || p == null) Iterator.empty
-    else {
-      val arr = AhoCorasick.matchRows(
-        t.asInstanceOf[UTF8String], p.asInstanceOf[UTF8String])
-      val n = arr.numElements()
-      if (n == 0) Iterator.empty
-      else new Iterator[InternalRow] {
-        private[this] var i = 0
-        override def hasNext: Boolean = i < n
-        override def next(): InternalRow = { val r = arr.getStruct(i, 2); i += 1; r }
-      }
-    }
-  }
+  override def eval(input: InternalRow): IterableOnce[InternalRow] =
+    AhoCorasick.matchRows(left.eval(input).asInstanceOf[UTF8String], right.eval(input).asInstanceOf[UTF8String])
+      .structRows(2)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (t, p) => s"graft.text.AhoCorasick.matchRows($t, $p)")

@@ -90,28 +90,8 @@ object Bpe {
       .agg(sum(col("c")).as("cnt"))
       .orderBy(col("cnt").desc, col("a"), col("b"))
 
-  /** One greedy-leftmost merge pass over a symbol array: fuse every
-    * non-overlapping (a, b) adjacency, scanning left to right (the
-    * fold's accumulator ends with the merged symbol, so an `aaa` word
-    * under merge (a,a) becomes [aa, a], not [a, aa]).
-    *
-    * No longer on the hot path (r20: every replay site runs the
-    * codegen'd `bpe_merge_all` via [[applyMerges]] instead); kept as
-    * BpeSpec's differential reference — the spec proves the codegen
-    * passes emit bit-identical symbol arrays to chains of this fold.
-    */
-  private[text] def applyMerge(syms: Column, a: String, b: String): Column =
-    aggregate(
-      syms,
-      array().cast("array<string>"),
-      (acc, x) =>
-        when(
-          size(acc) > 0 && element_at(acc, -1) === lit(a) && x === lit(b),
-          concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
-          .otherwise(concat(acc, array(x))))
-
   /** Sequential replay of a whole merge table over a symbol-array
-    * column — the hot-path form of chained [[applyMerge]] folds: ONE
+    * column — the hot-path form of chained per-merge folds: ONE
     * codegen'd expression (`bpe_merge_all`) runs every merge as an
     * in-place primitive pass (r20 optimization round; bit-identical
     * arrays — differential property in BpeSpec). No-op on an empty
@@ -252,7 +232,8 @@ object Bpe {
   }
 
   /** The one-merge-per-round learner — [[learn]] with batching off;
-    * `BpeSpec` uses it as the differential reference.
+    * `BpeSpec` uses it as the differential reference. It stays here,
+    * not in the spec, because it wraps the private [[learn]].
     */
   private[text] def learnSequential(
       docs: DataFrame, numMerges: Int): Seq[(Long, String, String, Long)] = {

@@ -28,7 +28,8 @@ import graft.functions.ReadOnlyArrayData
   * count; element access allocates only the 3-field output row.
   */
 final class NgramHashArrayData(toks: ArrayData, minN: Int, maxN: Int) extends ReadOnlyArrayData {
-  private[this] val t: Int = toks.numElements()
+  // null tokens (a generator's generated call is not null-guarded) have no windows
+  private[this] val t: Int = if (toks == null) 0 else toks.numElements()
   // prefix polynomial hashes and prefix char lengths
   private[this] val hp: Array[Long] = new Array[Long](t + 1)
   private[this] val lp: Array[Long] = new Array[Long](t + 1)
@@ -127,20 +128,8 @@ case class NgramHashGenerator(child: Expression, minN: Int, maxN: Int)
         TypeCheckResult.TypeCheckFailure(s"ngram_hashes needs array<string> tokens, got $other")
     }
 
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = child.eval(input)
-    if (v == null) Iterator.empty
-    else {
-      val arr = new NgramHashArrayData(v.asInstanceOf[ArrayData], minN, maxN)
-      val n = arr.numElements()
-      if (n == 0) Iterator.empty
-      else new Iterator[InternalRow] {
-        private[this] var i = 0
-        override def hasNext: Boolean = i < n
-        override def next(): InternalRow = { val r = arr.getStruct(i, 3); i += 1; r }
-      }
-    }
-  }
+  override def eval(input: InternalRow): IterableOnce[InternalRow] =
+    new NgramHashArrayData(child.eval(input).asInstanceOf[ArrayData], minN, maxN).structRows(3)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"new graft.text.NgramHashArrayData($c, $minN, $maxN)")

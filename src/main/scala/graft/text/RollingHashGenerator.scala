@@ -153,8 +153,19 @@ final class RollingHashRows(val pos: Array[Int], val hs: Array[Long]) extends Re
 }
 
 object RollingHashRows {
+  /** The rows of one generator call on either path: none for a null
+    * string (a generator's generated call is not null-guarded), the
+    * winnow-selected windows when `winnowW > 0`, the `keepMod` sample
+    * when `keepMod > 1`, else all windows.
+    */
+  def of(s: UTF8String, k: Int, winnowW: Int, keepMod: Int): RollingHashRows =
+    if (s == null) new RollingHashRows(Array.emptyIntArray, Array.emptyLongArray)
+    else if (winnowW > 0) winnowed(s, k, winnowW)
+    else if (keepMod > 1) sampled(s, k, keepMod)
+    else all(s, k)
+
   /** All k-windows: (1-based pos, combined hash). */
-  def all(s: UTF8String, k: Int): RollingHashRows = {
+  private def all(s: UTF8String, k: Int): RollingHashRows = {
     val hs = RollingHash.windowHashes(RollingHash.codePoints(s), k)
     new RollingHashRows(Array.tabulate(hs.length)(_ + 1), hs)
   }
@@ -165,7 +176,7 @@ object RollingHashRows {
     * window; at 1/8 keep that is 8× the allocations for the same
     * result).
     */
-  def sampled(s: UTF8String, k: Int, keepMod: Int): RollingHashRows = {
+  private def sampled(s: UTF8String, k: Int, keepMod: Int): RollingHashRows = {
     val hs = RollingHash.windowHashes(RollingHash.codePoints(s), k)
     val sp = new Array[Int](hs.length)
     val sh = new Array[Long](hs.length)
@@ -180,7 +191,7 @@ object RollingHashRows {
   }
 
   /** Winnow-selected fingerprints: (1-based pos, combined hash). */
-  def winnowed(s: UTF8String, k: Int, w: Int): RollingHashRows = {
+  private def winnowed(s: UTF8String, k: Int, w: Int): RollingHashRows = {
     val hs = RollingHash.windowHashes(RollingHash.codePoints(s), k)
     val sel = RollingHash.winnowSelect(hs, w)
     val sh = new Array[Long](sel.length)
@@ -224,33 +235,11 @@ case class RollingHashGenerator(
         TypeCheckResult.TypeCheckFailure(s"rolling_hashes needs a string column, got $other")
     }
 
-  private def rows(s: UTF8String): RollingHashRows =
-    if (winnowW > 0) RollingHashRows.winnowed(s, k, winnowW)
-    else if (keepMod > 1) RollingHashRows.sampled(s, k, keepMod)
-    else RollingHashRows.all(s, k)
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = child.eval(input)
-    if (v == null) Iterator.empty
-    else {
-      val arr = rows(v.asInstanceOf[UTF8String])
-      val n = arr.numElements()
-      if (n == 0) Iterator.empty
-      else new Iterator[InternalRow] {
-        private[this] var i = 0
-        override def hasNext: Boolean = i < n
-        override def next(): InternalRow = { val r = arr.getStruct(i, 2); i += 1; r }
-      }
-    }
-  }
+  override def eval(input: InternalRow): IterableOnce[InternalRow] =
+    RollingHashRows.of(child.eval(input).asInstanceOf[UTF8String], k, winnowW, keepMod).structRows(2)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (winnowW > 0)
-      defineCodeGen(ctx, ev, c => s"graft.text.RollingHashRows.winnowed($c, $k, $winnowW)")
-    else if (keepMod > 1)
-      defineCodeGen(ctx, ev, c => s"graft.text.RollingHashRows.sampled($c, $k, $keepMod)")
-    else
-      defineCodeGen(ctx, ev, c => s"graft.text.RollingHashRows.all($c, $k)")
+    defineCodeGen(ctx, ev, c => s"graft.text.RollingHashRows.of($c, $k, $winnowW, $keepMod)")
 
   override protected def withNewChildInternal(newChild: Expression): RollingHashGenerator =
     copy(child = newChild)

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{Checkpoints, EngineQuery, Tables}
@@ -132,46 +132,6 @@ object Unigram {
     vocab.map { case (p, c) => p -> (qlog2Ref(c) - qTot) }
   }
 
-  /** Viterbi DP backpointers as one fold per word: best[j] maximizes
-    * Σ scores over segmentations of the first j chars; candidates are
-    * the ≤ MaxPiece pieces ending at j that exist in the score map,
-    * evaluated p = 1..MaxPiece with strict >, so score ties go to the
-    * SHORTEST candidate — the oracle replays the identical chain.
-    * Single chars are always in the vocabulary, so best[j] is total.
-    *
-    * No longer on the hot path (r20: [[segmented]] runs the codegen'd
-    * `unigram_segment` instead); kept as UnigramSpec's differential
-    * reference — the spec proves the codegen loop emits bit-identical
-    * pieces to this fold chain on randomized words and score maps.
-    */
-  private[text] val dpExpr: String = {
-    def vp(p: Int) =
-      s"(element_at(acc.best, j - $p + 1) + try_element_at(m, (j - $p + 1) * 8 + $p))"
-    var chain = s"named_struct('v', ${vp(1)}, 'p', 1)"
-    for (p <- 2 to MaxPiece)
-      chain =
-        s"""IF(j >= $p AND ${vp(p)} IS NOT NULL AND ${vp(p)} > ($chain).v,
-           |named_struct('v', ${vp(p)}, 'p', $p), $chain)""".stripMargin
-    s"""aggregate(sequence(1, length(w)),
-       |  named_struct('best', array(CAST(0 AS BIGINT)), 'bp', CAST(array() AS ARRAY<INT>)),
-       |  (acc, j) -> named_struct(
-       |    'best', concat(acc.best, array(($chain).v)),
-       |    'bp', concat(acc.bp, array(($chain).p))),
-       |  acc -> acc.bp)""".stripMargin
-  }
-
-  /** Backpointer walk (length(w) is an upper bound on steps; the fold
-    * idles once j hits 0): emits the chosen pieces, end to start.
-    * Spec-reference twin of [[dpExpr]] (see its r20 note).
-    */
-  private[text] val backwalkExpr: String =
-    """aggregate(sequence(1, length(w)),
-      |  named_struct('j', length(w), 'ps', CAST(array() AS ARRAY<STRING>)),
-      |  (acc, i) -> IF(acc.j <= 0, acc, named_struct(
-      |    'j', acc.j - element_at(bp, acc.j),
-      |    'ps', concat(acc.ps, array(substring(w, acc.j - element_at(bp, acc.j) + 1, element_at(bp, acc.j)))))),
-      |  acc -> acc.ps)""".stripMargin
-
   /** The driver-side model as a broadcastable (piece, score) relation. */
   private def scoresDf(spark: org.apache.spark.sql.SparkSession,
       scores: Map[String, Long]): DataFrame =
@@ -194,8 +154,8 @@ object Unigram {
       .agg(map_from_entries(collect_list(
         struct((col("pos") * 8 + col("len")).as("k"), col("score").as("v")))).as("m"))
       // r20 optimization round: the DP + backwalk used to be two chained
-      // aggregate() HOF folds ([[dpExpr]]/[[backwalkExpr]], kept below as
-      // the differential spec's reference) — interpreted per element with
+      // aggregate() HOF folds (now UnigramSpec's differential
+      // reference) — interpreted per element with
       // O(|w|²) accumulator-array copies, re-paid per word in EVERY EM
       // round and the final tokenize pass. unigram_segment is the same
       // DP as one codegen'd primitive loop (bit-identical pieces,
@@ -259,21 +219,15 @@ object Unigram {
   /** The learned model: (piece, n_chars, cnt, qscore) — final expected
     * counts and fixed-point log-prob scores, most frequent first. The
     * model map is vocabulary-bounded, so the output assembles from a
-    * local relation; qscore still runs through the SQL qlog2 fold (the
-    * exact expression the oracle replays).
+    * local relation, with each qscore from [[scoresOf]] (the JVM twin
+    * of the qlog2 fold the oracle replays).
     */
   def unigramLearn(docs: DataFrame): DataFrame = {
     val (vocab, _, release) = learn(docs)
     release()
-    val spark = docs.sparkSession
-    val tot = vocab.values.sum
-    spark.createDataFrame(vocab.toSeq).toDF("piece", "cnt")
-      .withColumn("tot", lit(tot))
-      .select(
-        col("piece"),
-        length(col("piece")).cast("long").as("n_chars"),
-        col("cnt"),
-        expr(s"${sparkQlog2("cnt")} - ${sparkQlog2("tot")}").as("qscore"))
+    val scores = scoresOf(vocab)
+    val rows = vocab.toSeq.map { case (p, c) => (p, p.codePointCount(0, p.length).toLong, c, scores(p)) }
+    docs.sparkSession.createDataFrame(rows).toDF("piece", "n_chars", "cnt", "qscore")
       .orderBy(col("cnt").desc, col("piece"))
   }
 
@@ -416,7 +370,7 @@ object Unigram {
   /** The per-round DP/backwalk CTE block: dp as a linear recursion over
     * positions carrying (best, bp) lists, walk as a second recursion,
     * Viterbi candidates generated with the IDENTICAL p = 1..MaxPiece
-    * strict-> chain as [[dpExpr]].
+    * strict-> chain as `unigram_segment`.
     */
   private def duckRound(r: Int, scoresCte: String): String = {
     // jn = j + 1 is the position this recursion step fills

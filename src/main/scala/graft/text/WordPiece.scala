@@ -123,9 +123,9 @@ object WordPiece {
       new Trie(pieces)
     })
 
-  /** Static entry for generated code (null-tolerant, see AhoCorasick). */
+  /** Static entry both paths call (null-tolerant, see AhoCorasick). */
   def segmentRows(word: UTF8String, spec: UTF8String): ACMatchRows = {
-    if (word == null) return new ACMatchRows(Array.emptyIntArray, Array.emptyIntArray)
+    if (word == null || spec == null) return new ACMatchRows(Array.emptyIntArray, Array.emptyIntArray)
     val (pids, poss) = trie(spec.toString).segment(word.toString.codePoints().toArray)
     new ACMatchRows(pids, poss)
   }
@@ -327,22 +327,9 @@ case class WordPieceGenerator(left: Expression, right: Expression)
           "wordpiece_pieces needs (string column, foldable string vocab spec)")
     }
 
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val t = left.eval(input)
-    val p = right.eval(input)
-    if (t == null || p == null) Iterator.empty
-    else {
-      val arr = WordPiece.segmentRows(
-        t.asInstanceOf[UTF8String], p.asInstanceOf[UTF8String])
-      val n = arr.numElements()
-      if (n == 0) Iterator.empty
-      else new Iterator[InternalRow] {
-        private[this] var i = 0
-        override def hasNext: Boolean = i < n
-        override def next(): InternalRow = { val r = arr.getStruct(i, 2); i += 1; r }
-      }
-    }
-  }
+  override def eval(input: InternalRow): IterableOnce[InternalRow] =
+    WordPiece.segmentRows(left.eval(input).asInstanceOf[UTF8String], right.eval(input).asInstanceOf[UTF8String])
+      .structRows(2)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (t, p) => s"graft.text.WordPiece.segmentRows($t, $p)")

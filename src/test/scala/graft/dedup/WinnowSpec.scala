@@ -10,6 +10,56 @@ class WinnowSpec extends AnyFunSuite with Matchers {
   private val spark = TestSpark.spark
   import spark.implicits._
 
+  // ---- the fold pair common_run_len replaced ----------------------------
+
+  /** Block width of the two-level extension scan. */
+  private val ExtBlock = 16
+
+  /** ta/tb char position of 1-based extension offset `o`, leftward from
+    * the window start (dir < 0) or rightward from the window end.
+    */
+  private def extPos(side: Char, dir: Int, o: String): String =
+    if (dir > 0) s"pos_$side + ${Winnow.K - 1} + ($o)" else s"pos_$side - ($o)"
+
+  /** Two-level idle-out extension: the block fold compares
+    * [[ExtBlock]]-char chunks (packed acc = 2·matchedBlocks + stopbit),
+    * emitted as its own column so it evaluates ONCE; [[extRefine]]
+    * then scans ≤ ExtBlock chars inside the first mismatching block.
+    * `longestDupSubstrings` ran this pair until `common_run_len`
+    * replaced it; here it is the differential reference for that
+    * expression.
+    */
+  private def extBlocks(dir: Int, bound: String): String = {
+    val bw = ExtBlock
+    val len = s"least($bw, $bound - (j - 1) * $bw)"
+    def block(side: Char) =
+      if (dir > 0) s"substring(t$side, ${extPos(side, dir, s"(j - 1) * $bw + 1")}, $len)"
+      else s"substring(t$side, ${extPos(side, dir, s"(j - 1) * $bw + $len")}, $len)"
+    s"""IF($bound < 1, CAST(1 AS BIGINT),
+       |  aggregate(sequence(1, ($bound + ${bw - 1}) div $bw), CAST(0 AS BIGINT),
+       |    (acc, j) -> CASE WHEN acc % 2 = 1 THEN acc
+       |      WHEN ${block('a')} <> ${block('b')} THEN acc + 1
+       |      ELSE CAST(j AS BIGINT) * 2 END))""".stripMargin
+  }
+
+  /** Final extension length from the block-fold column `blkCol`: every
+    * block matched (even acc) → the full bound; else matched blocks
+    * plus a ≤ ExtBlock char-at-a-time refine inside the stopped block.
+    */
+  private def extRefine(dir: Int, bound: String, blkCol: String): String = {
+    val bw = ExtBlock
+    val base = s"(($blkCol div 2) * $bw)"
+    s"""CASE WHEN $bound < 1 THEN CAST(0 AS BIGINT)
+       |  WHEN $blkCol % 2 = 0 THEN CAST($bound AS BIGINT)
+       |  ELSE $base + aggregate(
+       |    sequence(1, least($bw, $bound - $base)), CAST(0 AS BIGINT),
+       |    (acc, i) -> CASE WHEN acc % 2 = 1 THEN acc
+       |      WHEN substring(ta, ${extPos('a', dir, s"$base + i")}, 1)
+       |        <> substring(tb, ${extPos('b', dir, s"$base + i")}, 1) THEN acc + 1
+       |      ELSE CAST(i AS BIGINT) * 2 END) div 2
+       |END""".stripMargin
+  }
+
   /** Reference winnow: enumerate every w-window, take its rightmost
     * minimum, union — the definition, O(n·w).
     */
@@ -237,10 +287,10 @@ class WinnowSpec extends AnyFunSuite with Matchers {
           .withColumn("rmax",
             org.apache.spark.sql.functions.least(
               col("la") - col("pos_a"), col("lb") - col("pos_b")) - (k - 1))
-          .withColumn("lblk", expr(Winnow.extBlocks(-1, "lmax")))
-          .withColumn("rblk", expr(Winnow.extBlocks(+1, "rmax")))
-          .withColumn("lext_old", expr(Winnow.extRefine(-1, "lmax", "lblk")))
-          .withColumn("rext_old", expr(Winnow.extRefine(+1, "rmax", "rblk")))
+          .withColumn("lblk", expr(extBlocks(-1, "lmax")))
+          .withColumn("rblk", expr(extBlocks(+1, "rmax")))
+          .withColumn("lext_old", expr(extRefine(-1, "lmax", "lblk")))
+          .withColumn("rext_old", expr(extRefine(+1, "rmax", "rblk")))
           .withColumn("lext_new", call_function("common_run_len",
             col("ta"), col("pos_a"), col("tb"), col("pos_b"), col("lmax"), lit(-1)))
           .withColumn("rext_new", call_function("common_run_len",

@@ -2,7 +2,7 @@ package graft.text
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -22,6 +22,23 @@ import graft.TestSpark.{DifferentialPaths, withConf}
 class BpeSpec extends AnyFunSuite with Matchers {
   private val spark = TestSpark.spark
   import spark.implicits._
+
+  /** One greedy-leftmost merge pass over a symbol array: fuse every
+    * non-overlapping (a, b) adjacency, scanning left to right (the
+    * fold's accumulator ends with the merged symbol, so an `aaa` word
+    * under merge (a,a) becomes [aa, a], not [a, aa]). Every replay site
+    * ran chains of this fold until `bpe_merge_all` replaced them; here
+    * it is the differential reference for that expression.
+    */
+  private def applyMerge(syms: Column, a: String, b: String): Column =
+    aggregate(
+      syms,
+      array().cast("array<string>"),
+      (acc, x) =>
+        when(
+          F.size(acc) > 0 && element_at(acc, -1) === lit(a) && x === lit(b),
+          concat(slice(acc, lit(1), F.size(acc) - 1), array(lit(a + b))))
+          .otherwise(concat(acc, array(x))))
 
   /** Classic in-memory BPE over lowercased whitespace words: the
     * learned merges AND the final vocabulary (one reference for both
@@ -195,7 +212,7 @@ class BpeSpec extends AnyFunSuite with Matchers {
       withConf(confs: _*) {
         val df = spark.sparkContext.parallelize(words, 2).toDF("w").select(split(col("w"), "").as("syms"))
         val oldCol = merges.foldLeft(col("syms")) { case (c0, (a, b)) =>
-          Bpe.applyMerge(c0, a, b)
+          applyMerge(c0, a, b)
         }
         val newCol = call_function("bpe_merge_all", col("syms"),
           typedlit(merges.map(_._1)), typedlit(merges.map(_._2)))

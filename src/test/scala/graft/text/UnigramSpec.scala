@@ -14,6 +14,43 @@ class UnigramSpec extends AnyFunSuite with Matchers {
   private val spark = TestSpark.spark
   import spark.implicits._
 
+  // ---- the HOF folds unigram_segment replaced ---------------------------
+
+  /** Viterbi DP backpointers as one fold per word: best[j] maximizes
+    * Σ scores over segmentations of the first j chars; candidates are
+    * the ≤ MaxPiece pieces ending at j that exist in the score map,
+    * evaluated p = 1..MaxPiece with strict >, so score ties go to the
+    * SHORTEST candidate — the oracle replays the identical chain.
+    * The learner ran this fold until `unigram_segment` replaced it;
+    * here it is the differential reference for that expression.
+    */
+  private val dpExpr: String = {
+    def vp(p: Int) =
+      s"(element_at(acc.best, j - $p + 1) + try_element_at(m, (j - $p + 1) * 8 + $p))"
+    var chain = s"named_struct('v', ${vp(1)}, 'p', 1)"
+    for (p <- 2 to Unigram.MaxPiece)
+      chain =
+        s"""IF(j >= $p AND ${vp(p)} IS NOT NULL AND ${vp(p)} > ($chain).v,
+           |named_struct('v', ${vp(p)}, 'p', $p), $chain)""".stripMargin
+    s"""aggregate(sequence(1, length(w)),
+       |  named_struct('best', array(CAST(0 AS BIGINT)), 'bp', CAST(array() AS ARRAY<INT>)),
+       |  (acc, j) -> named_struct(
+       |    'best', concat(acc.best, array(($chain).v)),
+       |    'bp', concat(acc.bp, array(($chain).p))),
+       |  acc -> acc.bp)""".stripMargin
+  }
+
+  /** Backpointer walk (length(w) is an upper bound on steps; the fold
+    * idles once j hits 0): emits the chosen pieces, end to start.
+    */
+  private val backwalkExpr: String =
+    """aggregate(sequence(1, length(w)),
+      |  named_struct('j', length(w), 'ps', CAST(array() AS ARRAY<STRING>)),
+      |  (acc, i) -> IF(acc.j <= 0, acc, named_struct(
+      |    'j', acc.j - element_at(bp, acc.j),
+      |    'ps', concat(acc.ps, array(substring(w, acc.j - element_at(bp, acc.j) + 1, element_at(bp, acc.j)))))),
+      |  acc -> acc.ps)""".stripMargin
+
   // ---- JVM reference ----------------------------------------------------
 
   private def refWordCounts(docs: Seq[(Long, String)]): Map[String, Long] =
@@ -90,7 +127,7 @@ class UnigramSpec extends AnyFunSuite with Matchers {
 
   test("qlog2 SQL expression matches the JVM reference fold") {
     val df = (1L to 2000L).toDF("c")
-    // the private SQL emitter is exercised through unigramLearn's qscore;
+    // the private SQL emitter is exercised through sourceTokenEntropy;
     // probe the identical expression inline here
     val q =
       """(CAST(length(bin(c)) - 1 AS BIGINT) * 256 +
@@ -162,8 +199,8 @@ class UnigramSpec extends AnyFunSuite with Matchers {
       withConf(confs: _*) {
         val df = spark.sparkContext.parallelize(rows, 2).toDF("w", "m")
         val got = df
-          .withColumn("bp", org.apache.spark.sql.functions.expr(Unigram.dpExpr))
-          .withColumn("pieces_old", org.apache.spark.sql.functions.expr(Unigram.backwalkExpr))
+          .withColumn("bp", org.apache.spark.sql.functions.expr(dpExpr))
+          .withColumn("pieces_old", org.apache.spark.sql.functions.expr(backwalkExpr))
           .withColumn("pieces_new",
             call_function("unigram_segment", col("w"), col("m"), lit(Unigram.MaxPiece)))
           .select("w", "pieces_old", "pieces_new")

@@ -11,9 +11,10 @@ import graft.{GraftSession, Measure, Tables}
   * [[Kmers.thresholded]] and `graft.Main` run, and emits one
   * `{"metric":"partitions_sweep",...}` JSON line per k and setting — the
   * reference's points-per-local-size curve, re-expressed. k = 8 counts
-  * in the dense table, one map task per scan partition; k = 31 sorts
-  * chunks, and its map side splits into window-range slices when the
-  * scan leaves task slots idle.
+  * in the dense table, cut into one count block per shuffle partition,
+  * so the sweep moves the block size too; k = 31 sorts chunks. At both,
+  * the map side splits into window-range slices when the scan leaves
+  * task slots idle.
   *
   * Run: `sbt "runMain graft.kmer.KmerBench"` with SPARK_GRAFT_SF_DIR
   * and SPARK_GRAFT_CPUS.

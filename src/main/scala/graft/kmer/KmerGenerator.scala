@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.ReadOnlyArrayData
 
@@ -15,16 +16,20 @@ import graft.functions.ReadOnlyArrayData
   * array per row; a naive CollectionGenerator would allocate the O(len)
   * window array).
   *
-  * Element access cost: for ASCII rows (char count == byte count — the
-  * overwhelming case for corpus text) each window is an O(1) zero-copy
-  * slice of the row's byte array. For multibyte rows a sequential
-  * char→byte cursor makes in-order access (the Generate loop's pattern)
-  * amortized O(k) per window instead of O(len).
+  * Element access cost: for ASCII rows (no byte with its high bit set —
+  * the overwhelming case for corpus text) each window is an O(1)
+  * zero-copy slice of the row's byte array. For multibyte rows a
+  * sequential char→byte cursor makes in-order access (the Generate
+  * loop's pattern) amortized O(k) per window instead of O(len).
+  *
+  * Construction tests the row for ASCII eight bytes at a time
+  * ([[KmerWindowsArrayData.isAscii]]) and counts chars, one walk over
+  * the row, only for a multibyte row.
   */
 final class KmerWindowsArrayData(s: UTF8String, k: Int) extends ReadOnlyArrayData {
   private[kmer] val bytes: Array[Byte] = s.getBytes
-  private[this] val nChars: Int = s.numChars()
-  private[kmer] val ascii: Boolean = bytes.length == nChars
+  private[kmer] val ascii: Boolean = KmerWindowsArrayData.isAscii(bytes)
+  private[this] val nChars: Int = if (ascii) bytes.length else s.numChars()
   private[this] val n: Int = if (nChars < k) 0 else nChars - k + 1
   // sequential-access cursor: byte offset of char `curChar` (multibyte path)
   private[this] var curChar: Int = 0
@@ -64,6 +69,20 @@ object KmerWindowsArrayData {
     */
   def of(s: UTF8String, k: Int): KmerWindowsArrayData =
     new KmerWindowsArrayData(if (s == null) UTF8String.EMPTY_UTF8 else s, k)
+
+  private val HighBits = 0x8080808080808080L
+
+  /** Whether no byte of `b` has its high bit set: the bytes OR'd eight at
+    * a time, then the tail one at a time.
+    */
+  def isAscii(b: Array[Byte]): Boolean = {
+    val words = b.length & ~7
+    var acc = 0L
+    var i = 0
+    while (i < words) { acc |= Platform.getLong(b, Platform.BYTE_ARRAY_OFFSET + i); i += 8 }
+    while (i < b.length) { acc |= b(i); i += 1 }
+    (acc & HighBits) == 0
+  }
 }
 
 /** Catalyst Generator emitting all width-k windows of a string — the

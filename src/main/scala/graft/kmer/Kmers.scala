@@ -12,7 +12,7 @@ import graft.{EngineQuery, Tables}
   * Spark-first design: the window relation ([[kmersGen]]) is a
   * generated column explode (one row per character position, the Map
   * kernel's `Mapped{word, v=1}` records). Counting ([[kmerCounts]]) is
-  * the reference's Map → sort → segmented-sum Reduce (reference
+  * the reference's Map → Reduce (reference
   * `src/CPU_Module/CPU.cpp:75-122`) moved into Spark's plan as one
   * [[KmerCount]] node, planned by [[KmerCountStrategy]]:
   *
@@ -20,16 +20,24 @@ import graft.{EngineQuery, Tables}
   *    2-bit packed codes, counted in one dense `int[4^k]` at k <= 10 or
   *    in radix-sorted, run-length-encoded `long[]` chunks above; any
   *    other window as its string in a bounded pre-count
-  *    ([[KmerPartitionCounter]]); one `(code, word, n)` row per key and
-  *    flush, none per window. Above k = 10, a scan with fewer partitions
-  *    than task slots runs as window-range slices, one task per slot,
-  *    with no shuffle or stage added;
-  *  - `Exchange hashpartitioning(code, word)` into
-  *    `spark.sql.shuffle.partitions`, by number, so AQE keeps every
-  *    reduce task;
-  *  - Spark's `SortExec` on (code, word), then `KmerSumExec`, which sums
-  *    equal neighbours in O(1) memory.
+  *    ([[KmerPartitionCounter]]). None emits a row per window: the dense
+  *    table goes out as one count block per reduce partition, the
+  *    chunks as one `(code, word, n)` row per key and flush. A scan with
+  *    fewer partitions than task slots runs as window-range slices, one
+  *    task per slot, with no shuffle or stage added;
+  *  - at k <= 10, an exchange by partition id
+  *    (`ShufflePartitionIdPassThrough`): count block b to reduce
+  *    partition b, a string window to its hash's; Spark's `SortExec` on
+  *    (word, part), which only orders the few block rows ahead of the
+  *    strings; then `KmerBlockSumExec`, which sums a partition's blocks
+  *    into its codes' counts, in code order, and each run of equal
+  *    strings;
+  *  - above k = 10, `Exchange hashpartitioning(code, word)`, Spark's
+  *    `SortExec` on (code, word), then `KmerSumExec`, which sums equal
+  *    neighbours in O(1) memory.
   *
+  * Both exchanges repartition by number into
+  * `spark.sql.shuffle.partitions`, so AQE keeps every reduce task.
   * `kmer_decode` restores a code's string once per output row, above the
   * count and after any count filter. The reference's `'\0'` file
   * barrier (`src/GPU_Module/GPU.cpp:36-40`) is free here: windows are
@@ -38,14 +46,18 @@ import graft.{EngineQuery, Tables}
   * Scale notes (100 TB): no row per window exists anywhere on the
   * counting path. A map task holds its input row's bytes plus either
   * `4^k` ints (4 MB at k = 10) or one chunk of at most 4M codes with as
-  * much radix scratch (64 MB), plus a string map of at most 65,536 keys;
-  * its output is at most one row per distinct key and flush, so shuffle
-  * volume is bounded by distinct k-mers per partition (per chunk above
-  * k = 10), not corpus size. A slice re-reads its parent partition only
-  * while slots would otherwise sit idle: a scan with at least as many
-  * partitions as slots, as at scale, runs one task per partition. The
-  * reduce side's memory is Spark's `SortExec`, which spills. No
-  * driver-side state.
+  * much radix scratch (64 MB), plus a string map of at most 65,536 keys.
+  * Its output is at most one count block per reduce partition at
+  * k <= 10, and one row per distinct key and flush above, so shuffle
+  * volume is bounded by the key space or by distinct k-mers per
+  * partition (per chunk above k = 10), not corpus size. A slice re-reads
+  * its parent partition only while slots would otherwise sit idle: a
+  * scan with at least as many partitions as slots, as at scale, runs one
+  * task per partition. A dense reduce task holds one `long[B]`, `B =
+  * ceil(4^k / partitions)` (8 MB at k = 10 on one partition): a code's
+  * total can pass `Int.MaxValue`. The strings and the sorted regime's
+  * reduce side use Spark's `SortExec`, which spills. No driver-side
+  * state.
   */
 object Kmers {
   /** Max window width, kept for semantic parity with the reference's

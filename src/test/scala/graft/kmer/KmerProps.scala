@@ -2,6 +2,7 @@ package graft.kmer
 
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.unsafe.types.UTF8String
 import graft.TestSpark
 import graft.TestSpark.{DifferentialPaths, withConf}
@@ -160,9 +161,11 @@ object KmerProps extends Properties("Kmers") {
     * inside a slice.
     */
   private def sliceRows(texts: Seq[String], k: Int, slice: Int, slices: Int): Seq[(String, Long)] =
-    new KmerPartitionCounter(texts.iterator.map(UTF8String.fromString), k, 64, 8, slice, slices)
-      .map(r => (if (r.isNullAt(1)) KmerCodes.decode(r.getLong(0), k).toString else r.getUTF8String(1).toString) ->
-        r.getLong(2))
+    counterRows(texts, k, slice, slices, 1).flatMap(CounterRows.decode(_, k, 1))
+
+  private def counterRows(texts: Seq[String], k: Int, slice: Int, slices: Int, partitions: Int): Vector[InternalRow] =
+    new KmerPartitionCounter(texts.iterator.map(UTF8String.fromString), k, 64, 8, slice, slices, partitions)
+      .map(_.copy())
       .toVector
 
   property("the counter's window-range slices sum to the sliding-window counts at k in {11, 31, 32, 33}") =
@@ -170,6 +173,43 @@ object KmerProps extends Properties("Kmers") {
       Seq(11, 31, 32, 33).forall { k =>
         val sliced = (0 until slices).flatMap(sliceRows(texts, k, _, slices)).groupMapReduce(_._1)(_._2)(_ + _)
         sliced == naiveCounts(texts, k)
+      }
+    }
+
+  // The dense regime at k in {1, 5, 8, 10}: S slices each cut their
+  // table into count blocks for N reduce partitions. N = 3 and 7 divide
+  // no 4^k, so the last block is short; at N = 200 and k = 1 a block is
+  // one code.
+  private val genDense: Gen[(List[String], Int, Int)] =
+    Gen.zip(genCounterCorpus, Gen.chooseNum(1, 8), Gen.oneOf(1, 3, 4, 7, 200))
+
+  /** One reduce partition's rows in [[KmerBlockSumExec]]'s child order:
+    * count blocks first, by block id, then the string windows, equal
+    * words together.
+    */
+  private val reduceOrder: Ordering[InternalRow] = (a, b) =>
+    (a.isNullAt(1), b.isNullAt(1)) match {
+      case (true, true) => Integer.compare(a.getInt(0), b.getInt(0))
+      case (true, false) => -1
+      case (false, true) => 1
+      case _ => a.getUTF8String(1).compareTo(b.getUTF8String(1))
+    }
+
+  property("the dense regime's count blocks and string rows sum to the sliding-window counts") =
+    forAll(genDense) { case (texts, slices, n) =>
+      Seq(1, 5, 8, 10).forall { k =>
+        val rows = (0 until slices).flatMap(counterRows(texts, k, _, slices, n))
+        val naive = naiveCounts(texts, k)
+        // summed as they leave the slices
+        val sliced = rows.flatMap(CounterRows.decode(_, k, n)).groupMapReduce(_._1)(_._2)(_ + _)
+        // and as the reduce side sums them, each row in partition pmod(part, n)
+        val reduced = rows.groupBy(r => Math.floorMod(r.getInt(0), n)).values.flatMap { part =>
+          KmerBlocks.sum(part.sorted(reduceOrder).iterator, k, n).map { r =>
+            (if (r.isNullAt(1)) KmerCodes.decode(r.getLong(0), k).toString else r.getUTF8String(1).toString) ->
+              r.getLong(2)
+          }
+        }.toSeq
+        sliced == naive && reduced.toMap == naive && reduced.size == naive.size
       }
     }
 }

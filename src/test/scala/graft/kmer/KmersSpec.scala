@@ -2,7 +2,8 @@ package graft.kmer
 
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RoundRobinPartitioning}
+import org.apache.spark.sql.catalyst.expressions.DirectShufflePartitionID
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RoundRobinPartitioning, ShufflePartitionIdPassThrough}
 import org.apache.spark.sql.execution.{SortExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
@@ -14,6 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import org.apache.spark.graftmetrics.TestScheduler
 import graft.TestSpark
+import graft.TestSpark.withConf
 
 /** Pins the k-mer semantics the reference's verifier checks
   * (`/root/reference/scripts/verifier.py:22-36`,
@@ -101,7 +103,7 @@ class KmersSpec extends AnyFunSuite with Matchers {
         "TTN" -> 1L, "TNC" -> 1L, "NCA" -> 1L)
       val plan = counts.queryExecution.executedPlan
       aqe.collect(plan) { case e: KmerCountExec => e } should have size 1
-      aqe.collect(plan) { case e: KmerSumExec => e } should have size 1
+      aqe.collect(plan) { case e: KmerBlockSumExec => e } should have size 1
       val stages = aqe.collect(plan) { case w: WholeStageCodegenExec => w }
       stages.exists(_.child.exists(_.expressions.exists(_.exists(_.isInstanceOf[KmerDecode])))) shouldBe true
     } finally spark.conf.set("spark.sql.codegen.fallback", "true")
@@ -124,9 +126,9 @@ class KmersSpec extends AnyFunSuite with Matchers {
   }
 
   test("the counting plan: partition counter, by-number exchange, sort, segmented sum") {
-    val texts = Seq("ACGTACGTNACGT", "acgtACGT", "GATTACA")
-    val df = Kmers.thresholded(texts.toDF("text"), "text", 3)
-    df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe naive(texts, 3).filter(_._2 > 1)
+    val texts = Seq("ACGTACGTNACGT", "acgtACGT", "GATTACA", "ACGTACGTACGTACGT")
+    val df = Kmers.thresholded(texts.toDF("text"), "text", 11)
+    df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe naive(texts, 11).filter(_._2 > 1)
     val plan = df.queryExecution.executedPlan
     aqe.collect(plan) { case a: HashAggregateExec => a } shouldBe empty
     val exchanges = aqe.collect(plan) { case e: ShuffleExchangeExec => e }
@@ -143,6 +145,56 @@ class KmersSpec extends AnyFunSuite with Matchers {
     sum.child.exists(_.isInstanceOf[SortExec]) shouldBe true
   }
 
+  test("the dense counting plan: partition counter, partition-id exchange, sort, block sum") {
+    val texts = Seq("ACGTACGTNACGT", "acgtACGT", "GATTACA")
+    val df = Kmers.thresholded(texts.toDF("text"), "text", 3)
+    df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe naive(texts, 3).filter(_._2 > 1)
+    val plan = df.queryExecution.executedPlan
+    aqe.collect(plan) { case a: HashAggregateExec => a } shouldBe empty
+    // one exchange, by number: block b to partition b, a string to its hash's
+    val Seq(exchange) = aqe.collect(plan) { case e: ShuffleExchangeExec => e }
+    exchange.shuffleOrigin shouldBe REPARTITION_BY_NUM
+    exchange.child shouldBe a[KmerCountExec]
+    val ShufflePartitionIdPassThrough(DirectShufflePartitionID(part), n) = exchange.outputPartitioning
+    part.sql shouldBe "part"
+    n shouldBe spark.conf.get("spark.sql.shuffle.partitions").toInt
+    aqe.collect(plan) { case r: AQEShuffleReadExec => r } shouldBe empty
+    aqe.collect(plan) { case s: KmerSumExec => s } shouldBe empty
+    val Seq(sum) = aqe.collect(plan) { case s: KmerBlockSumExec => s }
+    sum.child.exists(_.isInstanceOf[SortExec]) shouldBe true
+  }
+
+  test("the dense regime sends count block b, from every slice, to reduce partition b alone") {
+    val slots = spark.sparkContext.defaultParallelism
+    val rnd = new scala.util.Random(19)
+    val texts = Seq.fill(3)(Seq.fill(2000)("ACGT".charAt(rnd.nextInt(4))).mkString) :+ "ACGTNACGTé" * 8
+    for (n <- Seq(1, 3, 4, 7)) withClue(s"N=$n: ") {
+      withConf("spark.sql.shuffle.partitions" -> n.toString) {
+        val df = Kmers.kmerCounts(spark.sparkContext.parallelize(texts, 1).toDF("text"), "text", 5)
+        df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe naive(texts, 5)
+        val Seq(exchange) = aqe.collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+        val blocks = exchange.execute()
+          .mapPartitionsWithIndex((i, rows) => rows.filter(_.isNullAt(1)).map(r => i -> r.getInt(0)))
+          .collect()
+        // each reduce task gets exactly one block id, its own, once from each of the slots slices
+        blocks.groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap shouldBe (0 until n).map(i => i -> Set(i)).toMap
+        blocks.length shouldBe slots * n
+      }
+    }
+  }
+
+  test("a block sum adds entries near Int.MaxValue exactly, in Long") {
+    def block(counts: Int*): Array[Byte] = {
+      val b = java.nio.ByteBuffer.allocate(4 * counts.length).order(java.nio.ByteOrder.nativeOrder())
+      counts.foreach(b.putInt)
+      b.array()
+    }
+    val total = new Array[Long](3)
+    KmerBlocks.add(total, block(Int.MaxValue, Int.MaxValue - 1, 1)) shouldBe 3
+    KmerBlocks.add(total, block(Int.MaxValue, 2, Int.MaxValue)) shouldBe 3
+    total.toSeq shouldBe Seq(2L * Int.MaxValue, Int.MaxValue + 1L, Int.MaxValue + 1L)
+  }
+
   private def naive(texts: Seq[String], k: Int): Map[String, Long] =
     texts.flatMap(_.sliding(k).filter(_.length == k)).groupBy(identity).view.mapValues(_.size.toLong).toMap
 
@@ -152,10 +204,9 @@ class KmersSpec extends AnyFunSuite with Matchers {
   private def counterTotals(texts: Seq[String], k: Int, chunk: Int, strings: Int,
                             slice: Int = 0, slices: Int = 1): (Int, Map[String, Long]) = {
     val rows = new KmerPartitionCounter(texts.iterator.map(UTF8String.fromString), k, chunk, strings, slice, slices)
-      .map(r => (if (r.isNullAt(1)) KmerCodes.decode(r.getLong(0), k).toString else r.getUTF8String(1).toString,
-        r.getLong(2)))
+      .map(CounterRows.decode(_, k, 1))
       .toVector
-    (rows.size, rows.groupMapReduce(_._1)(_._2)(_ + _))
+    (rows.size, rows.flatten.groupMapReduce(_._1)(_._2)(_ + _))
   }
 
   test("sortRuns radix-sorts and run-length encodes a chunk") {
@@ -208,7 +259,7 @@ class KmersSpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("the map side runs a task per slot when the child leaves slots idle, above the dense regime") {
+  test("the map side runs a task per slot when the child leaves slots idle") {
     val slots = spark.sparkContext.defaultParallelism
     val rnd = new scala.util.Random(17)
     val texts = Seq.fill(3)(Seq.fill(500)("ACGT".charAt(rnd.nextInt(4))).mkString) :+ "ACGTNACGTé" * 8
@@ -219,14 +270,14 @@ class KmersSpec extends AnyFunSuite with Matchers {
     slots should be > 1
     mapTasks(1, 31) shouldBe slots
     mapTasks(1, 11) shouldBe slots
-    mapTasks(1, 8) shouldBe 1
+    mapTasks(1, 8) shouldBe slots
     mapTasks(slots, 31) shouldBe slots
     mapTasks(slots + 1, 31) shouldBe slots + 1
     // several child partitions, each cut into slots / parts slices
     TestScheduler.withDefaultParallelism(spark.sparkContext, 8) {
       mapTasks(2, 31) shouldBe 8
       mapTasks(3, 31) shouldBe 6
-      mapTasks(2, 8) shouldBe 2
+      mapTasks(2, 8) shouldBe 8
     }
   }
 
@@ -307,6 +358,28 @@ class KmersSpec extends AnyFunSuite with Matchers {
       val e = analysisError(s"SELECT $fn(${Seq.fill(m)("text").mkString(", ")}) FROM kmer_args")
       e.errorClass shouldBe Some("WRONG_NUM_ARGS.WITHOUT_SUGGESTION")
       e.getMessage should include(s"`$fn`")
+    }
+  }
+
+  test("the ASCII test finds a high-bit byte at every position of rows of 0 to 24 bytes") {
+    for (len <- 0 to 24; at <- -1 until len) withClue(s"len=$len, at=$at: ") {
+      val bytes = Array.fill[Byte](len)('A')
+      if (at >= 0) bytes(at) = 0xa9.toByte
+      KmerWindowsArrayData.isAscii(bytes) shouldBe at < 0
+    }
+  }
+
+  test("a row's windows and their count do not depend on where its multibyte char sits") {
+    // é is two high-bit bytes: at char `at` of a row of `len` chars it
+    // covers every byte position of a 0-to-25-byte row once
+    for (len <- 0 to 24; at <- -1 until len; k <- Seq(1, 3)) withClue(s"len=$len, at=$at, k=$k: ") {
+      val ascii = "ACGTNacgtACGTNacgtACGTNac".take(len)
+      val text = if (at < 0) ascii else ascii.updated(at, 'é')
+      val s = UTF8String.fromString(text)
+      val windows = new KmerWindowsArrayData(s, k)
+      windows.ascii shouldBe (s.numChars == s.numBytes)
+      windows.numElements() shouldBe math.max(0, len - k + 1)
+      (0 until windows.numElements()).map(windows.getUTF8String(_).toString) shouldBe text.sliding(k).filter(_.length == k).toSeq
     }
   }
 
